@@ -129,9 +129,14 @@ object ClusterSmoke {
     val edges = Seq((1L, 2L, 5L), (2L, 1L, 1L), (2L, 3L, 4L), (3L, 2L, 2L),
       (3L, 1L, 7L), (1L, 3L, 1L)).toDF("src", "dst", "w")
     val dir = java.nio.file.Files.createTempDirectory("graft_cluster_ckpt").toString
-    def ranks(d: Option[String]) =
-      graft.pipeline.Graph.pagerank(edges, 6, checkpointDir = d)
+    // driver cap 0: the rounds themselves run and checkpoint distributed
+    def ranks(d: Option[String]) = {
+      spark.conf.set("graft.graph.maxDriverEdges", "0")
+      d.foreach(spark.conf.set("graft.checkpointDir", _))
+      try graft.pipeline.Graph.pagerank(edges, 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      finally Seq("graft.graph.maxDriverEdges", "graft.checkpointDir").foreach(spark.conf.unset)
+    }
     val reliable = ranks(Some(dir))
     val local = ranks(None)
     if (reliable != local)

@@ -12,6 +12,33 @@ import org.apache.spark.sql.SparkSession
   * lines and exit nonzero so plan regressions are loud.
   */
 object PlanAudit {
+  /** Does a shuffle in `d`'s physical plan read a cached relation
+    * through unary operators only — re-exchange a side persisted
+    * already partitioned? */
+  def shufflesCached(d: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def reaches(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case o => o.children.size == 1 && !o.isInstanceOf[ShuffleExchangeExec] &&
+        reaches(o.children.head)
+    }
+    physical(d).collect { case s: ShuffleExchangeExec => s }.exists(s => reaches(s.child))
+  }
+
+  /** Join operators in `d`'s physical plan, not counting those inside
+    * cached relations (built once, not per round). */
+  def joinCount(d: org.apache.spark.sql.DataFrame): Int =
+    physical(d).collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.size
+
+  /** The physical plan, with AQE's wrapper opened to its current plan. */
+  private def physical(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan =
+    d.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     // extra args restrict to those audits (iteration aid); restricted
@@ -955,85 +982,21 @@ object PlanAudit {
       sb.append("```\n").append(plan.take(6000)).append("\n```\n")
       }
     }
-    // ---- iterative round plans (q119 pagerank / q127 communities):
-    // the loops materialize every round, so the final query plan shows
-    // only a LogicalRDD scan — audit ONE un-materialized round
-    // directly, plus the pre-partitioned variant's exchange elision.
+    // ---- iterative round plans: the loops materialize their state
+    // every few rounds, so the final query plan shows only a LogicalRDD
+    // scan — audit ONE un-materialized round of each loop directly.
+    // The message-passing operators (q119/q127/q130/q134/q135) are
+    // audited on the vertex-program runner's cluster round over its one
+    // distributed edge layout.
     if (only.isEmpty || only("iterative_rounds")) {
-      import org.apache.spark.sql.functions.{array, col, expr, greatest, least, lit, shiftrightunsigned, udaf, when}
+      import org.apache.spark.sql.functions.{col, expr, greatest, least, lit, pmod}
+      import graft.pipeline.{Graph, VertexProgram}
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val li = graft.queries.QueryDsl.t(spark, sfDir, "lineitem")
-      val strong = graft.pipeline.Graph.supplierCooccurrence(li)
+      val strong = Graph.supplierCooccurrence(li)
         .filter(col("w") >= 8)
         .select(col("src"), col("dst"), col("w").cast("long").as("w"))
         .localCheckpoint()
-      def topPlan(d: org.apache.spark.sql.DataFrame): String = {
-        val s = d.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val cut = s.indexOf("InMemoryRelation")
-        if (cut < 0) s else s.take(cut)
-      }
-      def nExchanges(d: org.apache.spark.sql.DataFrame): Int = {
-        val s = d.queryExecution.executedPlan.toString
-        val cut = s.indexOf("InMemoryRelation")
-        "Exchange".r.findAllIn(if (cut < 0) s else s.take(cut)).length
-      }
-      // q127 round: ONE label join + the (src,label) weight agg + the
-      // per-src argmax agg — no cartesian stage, bounded by |E|
-      val l0 = strong.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("label")).localCheckpoint()
-      val lpa = graft.pipeline.Graph.lpaRound(strong, l0)
-      val lpaPlan = lpa.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      // count join OPERATORS in the plain tree (FormattedMode repeats
-      // each operator name in its details section)
-      val lpaJoins = "(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)".r
-        .findAllIn(lpa.queryExecution.executedPlan.toString).length
-      if (lpaJoins != 1 || lpaPlan.contains("CartesianProduct") ||
-          lpaPlan.contains("BroadcastNestedLoopJoin")) {
-        println(s"ASSERT FAIL [q127 lpa round]: joins=$lpaJoins or cartesian present")
-        failures += 1
-      }
-      sb.append("\n## q127_communities — one LPA round\n\n")
-      sb.append("Per round: one equi-join of the label vector on dst, one\n")
-      sb.append("(src, label) weight aggregation, one per-src argmax — all\n")
-      sb.append("bounded by |E|, label vector materialized every 5th round\n")
-      sb.append("(the chain is reference-free, pagerank's fast-path pattern).\n\n")
-      sb.append("```\n").append(lpaPlan.take(4000)).append("\n```\n")
-      // pre-partitioned pagerank round: edge side cached hash(src) —
-      // the per-iteration join must NOT re-exchange it
-      val ranked = strong.groupBy(col("src"))
-        .agg(org.apache.spark.sql.functions.sum(col("w")).as("ow"))
-      val ew = strong.join(ranked, Seq("src"))
-        .select(col("src"), col("dst"), col("w"), col("ow"))
-      val ewPre = ew.repartition(col("src")).persist()
-      ewPre.count()
-      val ewPlain = ew.localCheckpoint()
-      val rank0 = ewPlain.select(col("src").as("v")).distinct()
-        .select(col("v"), lit(1L).as("rank")).localCheckpoint()
-      val exPre = nExchanges(graft.pipeline.Graph.pagerankStep(ewPre, rank0, 1L, None))
-      val exPlain = nExchanges(graft.pipeline.Graph.pagerankStep(ewPlain, rank0, 1L, None))
-      if (exPre >= exPlain) {
-        println(s"ASSERT FAIL [pre-partitioned pagerank round]: $exPre >= $exPlain exchanges")
-        failures += 1
-      }
-      sb.append("\n## q119_pagerank — pre-partitioned iteration round\n\n")
-      sb.append(s"With edges persisted under hash(src), one round plans $exPre\n")
-      sb.append(s"exchanges vs $exPlain on the default path: the edge side joins\n")
-      sb.append("from the cached partitioning and only the rank vector (O(|V|))\n")
-      sb.append("shuffles per iteration — the production shape for deep loops.\n\n")
-      sb.append("```\n")
-        .append(topPlan(graft.pipeline.Graph.pagerankStep(ewPre, rank0, 1L, None)).take(4000))
-        .append("\n```\n")
-      ewPre.unpersist(false)
-
-      // ---- round-shape audits for the round-9 graph family
-      // (q130/q133/q134/q135/q136): each loop body is a private[graft]
-      // step function, audited here exactly as lpaRound/pagerankStep
-      // are — join-count + forbidden-operator pins against regression.
-      def joinCount(d: org.apache.spark.sql.DataFrame): Int =
-        "(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)".r
-          .findAllIn(d.queryExecution.executedPlan.toString).length
       def auditRound(name: String, round: org.apache.spark.sql.DataFrame,
                      wantJoins: Int, mustContain: Seq[String], why: String): Unit = {
         val planStr = round.queryExecution.executedPlan.toString
@@ -1056,37 +1019,53 @@ object PlanAudit {
             org.apache.spark.sql.execution.FormattedMode).take(3500))
           .append("\n```\n")
       }
+      // a runner round over its cached edge layout (hash-partitioned on
+      // the sender, persisted): the edge side joins from its cached
+      // partitioning, so no exchange may sit between the edge scan and
+      // the join — only the state side shuffles
+      def auditProgram(name: String, p: VertexProgram, e: org.apache.spark.sql.DataFrame,
+                       wantJoins: Int, why: String): Unit = {
+        val plans = VertexProgram.clusterPlans(p, e)
+        val round = plans.round(plans.init)
+        auditRound(name, round, wantJoins, Seq("InMemoryTableScan"), why)
+        if (shufflesCached(round)) {
+          println(s"ASSERT FAIL [$name round]: the cached edge side is re-exchanged")
+          failures += 1
+        }
+        plans.edges.unpersist(false)
+      }
+      val seed = (v: org.apache.spark.sql.Column) => pmod(v, lit(10)) === 0
 
-      // q130 trustrank FAST round (the q130 shape since round 16: the
-      // co-occurrence graph's src and dst sets coincide, so the seed
-      // flag rides the edge relation and the round is ONE join + ONE
-      // agg — the pagerank fast shape)
-      val seeded0 = ewPlain.select(col("src").as("v")).distinct()
-        .select(col("v"), (col("v") % 5 === 0).as("s")).localCheckpoint()
-      val rank0p = seeded0.select(col("v"),
-        when(col("s"), lit(1000L)).otherwise(lit(0L)).as("rank"))
+      auditProgram("q119_pagerank", Graph.pagerankProgram(10), strong, 1,
+        "Per round: ONE equi-join of the rank vector onto the cached edges\n" +
+          "(hash-partitioned on src, so only the rank vector shuffles) + the\n" +
+          "contribution sum per dst. The co-occurrence graph's src and dst\n" +
+          "sets coincide, so every node receives a contribution and the\n" +
+          "node left join of asymmetric graphs drops out.")
+
+      // q127 round: ONE label join + the (src,label) weight agg + the
+      // per-src argmax agg — no cartesian stage, bounded by |E|
+      auditProgram("q127_communities", Graph.lpaProgram(5), strong, 1,
+        "Per round: one equi-join of the label vector on dst, one\n" +
+          "(src, label) weight aggregation, one per-src argmax — all\n" +
+          "bounded by |E|, label vector materialized every 5th round.")
+
+      auditProgram("q130_trustrank", Graph.trustProgram(seed, 10), strong, 1,
+        "Per round (src and dst sets coincide on the co-occurrence graph,\n" +
+          "decided once before the loop): ONE contribution equi-join on src\n" +
+          "+ its sum agg; the restart mass rides a dst-side seed flag\n" +
+          "evaluated ON the cached edge relation, so the round costs exactly\n" +
+          "what plain pagerank costs.")
+
+      // a pure sink (dst -1 is never a src) makes the node set differ
+      // from the receiver set: the seeded node relation re-attaches
+      val withSink = strong.union(strong.limit(1).select(col("src"), lit(-1L).as("dst"), col("w")))
         .localCheckpoint()
-      val ewSeeded = ewPlain.withColumn("sd", (col("dst") % 5 === 0).cast("boolean"))
-      auditRound("q130_trustrank",
-        graft.pipeline.Graph.pprFastStep(ewSeeded, rank0p, 7L), 1, Nil,
-        "Per round (fast path — src and dst sets coincide on the\n" +
-          "co-occurrence graph, probed once before the loop): ONE\n" +
-          "contribution equi-join on src + its sum agg; the restart mass\n" +
-          "rides a dst-side seed flag evaluated ON the edge relation, so\n" +
-          "the per-round seeded left join of the guarded slow path\n" +
-          "(pprStep, below) is gone and the round costs exactly what\n" +
-          "plain pagerank costs.")
-
-      // q130 trustrank SLOW round (asymmetric graphs — zero-indegree
-      // source or pure sink): the seeded left join re-attaches the
-      // node relation, exactly two joins
-      auditRound("q130_trustrank_seeded_path",
-        graft.pipeline.Graph.pprStep(ewPlain, seeded0, rank0p, 7L), 2, Nil,
+      auditProgram("q130_trustrank_seeded_path", Graph.trustProgram(seed, 10), withSink, 2,
         "Per round: ONE contribution equi-join on src + its sum agg, then\n" +
           "ONE left join re-attaching the seeded node relation whose boolean\n" +
           "carries the restart mass — the seed set never joins separately.\n" +
-          "Taken only when the src/dst sets differ (the one fused probe\n" +
-          "job decides).")
+          "Taken only when the src/dst sets differ (one stats job decides).")
 
       // q133 harmonic centrality hop: frontier×edges equi-join, dedup,
       // first-distance-wins anti join against the reached union
@@ -1104,31 +1083,19 @@ object PlanAudit {
       // q134 KMV-HyperBall merge round: one |E| join + ONE map-side-
       // combinable bottom-k sketch-merge aggregation — no second pass
       graft.functions.ContentHashExpression.register(spark)
-      val h62 = shiftrightunsigned(
-        graft.functions.ContentHashExpression.contentHash64(col("v").cast("string")), 2)
-      val merge8 = udaf(new graft.functions.KmvMergeAggregator(8))
-      val nodesHB = strongE.select(col("src").as("v")).distinct()
-      val eSelf = strongE
-        .union(nodesHB.select(col("v").as("src"), col("v").as("dst")))
-        .localCheckpoint()
-      val hb0 = nodesHB.select(col("v"), array(h62).as("sk")).localCheckpoint()
-      auditRound("q134_neighborhood_sketch",
-        graft.pipeline.Graph.hyperballRound(eSelf, hb0, merge8), 1, Nil,
+      auditProgram("q134_neighborhood_sketch", Graph.neighborhoodProgram(3, 8),
+        strongE.localCheckpoint(), 1,
         "Per round: ONE equi-join carrying each node's sketch to its\n" +
-          "in-neighbors (self-loops carry the node's own sketch — no separate\n" +
-          "union-with-previous pass) + ONE bottom-k merge aggregation that\n" +
-          "combines map-side, so shuffle is O(|V|·k), not O(|E|·k).")
+          "in-neighbors, unioned with each node's own sketch (no self-loop\n" +
+          "edges, no separate union-with-previous pass) + ONE bottom-k merge\n" +
+          "aggregation that combines map-side, so shuffle is O(|V|·k).")
 
       // q135 min-plus relax round: one |E| join + one min agg over
       // (kept ∪ relaxed) — reduction-order-free integer arithmetic
       val ec = strong
-        .select(col("src"), col("dst"), expr("1000000 div w").as("cost"))
+        .select(col("src"), col("dst"), expr("1000000 div w").as("w"))
         .localCheckpoint()
-      val dist0 = ec.select(col("src").as("v")).distinct()
-        .filter(col("v") % 5 === 0)
-        .select(col("v"), lit(0L).as("cost")).localCheckpoint()
-      auditRound("q135_cheapest_paths",
-        graft.pipeline.Graph.relaxRound(ec, dist0), 1, Nil,
+      auditProgram("q135_cheapest_paths", Graph.cheapestProgram(seed, 4), ec, 1,
         "Per round: ONE equi-join relaxing every edge from the current\n" +
           "distance vector, then a union with the kept distances and ONE min\n" +
           "aggregation — O(|E|) per round, integer min-plus is\n" +

@@ -472,7 +472,7 @@ object ScaleProbe {
     // 10 DISJOINT subgraph copies (node ids offset per copy): |V| and
     // |E| both grow 10×, every copy converges to the base ranks, so
     // the ratio measures the per-iteration join+aggregate cost
-    if (only.isEmpty || only("pagerank") || only("pagerank_prepart") ||
+    if (only.isEmpty || only("pagerank") ||
         only("trustrank") || only("harmonic") || only("neighborhood") ||
         only("kcore") || only("link_prediction") || only("link_cap") ||
         only("triangles") || only("communities") || only("skew_wedges")) {
@@ -486,13 +486,6 @@ object ScaleProbe {
         probe("pagerank",
           graft.pipeline.Graph.pagerank(edges1, 10).count(),
           graft.pipeline.Graph.pagerank(edgesN, 10).count())
-      // pre-partitioned edges: one hash exchange up front, then every
-      // iteration's join reads the cached partitioning and shuffles
-      // only the rank vector — the production shape for deep loops
-      if (only.isEmpty || only("pagerank_prepart"))
-        probe("pagerank_prepart",
-          graft.pipeline.Graph.pagerank(edges1, 10, prePartitionEdges = true).count(),
-          graft.pipeline.Graph.pagerank(edgesN, 10, prePartitionEdges = true).count())
       // disjoint copies with ids offset by 10^6 (a multiple of 10, so
       // the v % 10 == 0 seed set replicates per copy): the ratio
       // measures the same per-iteration join+agg as pagerank plus the

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large text corpora: exact, n-gram
@@ -1010,31 +1010,46 @@ object Dedup {
     * per-iteration plan here is the same building block. Input pairs
     * must satisfy id_a < id_b; output is (id, rep).
     */
-  def dedupGroups(pairs: DataFrame, maxIters: Int = 50,
-                  checkpointDir: Option[String] = None): DataFrame = {
+  def dedupGroups(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     // Iterative algorithms MUST truncate lineage every round: each round
     // references the previous labels three times, so without
-    // checkpointing the logical plan grows 3^rounds. The default
-    // localCheckpoint materializes the round's result and replaces its
-    // plan with the stored partitions; passing `checkpointDir` swaps in
-    // reliable checkpoint(dir) so an executor loss at production scale
-    // re-reads one round's state instead of replaying the chain.
-    // materialize the pair plan BEFORE symmetrizing: the union's two
+    // checkpointing the logical plan grows 3^rounds. Each round's result
+    // materializes (localCheckpoint, or a reliable checkpoint under
+    // `graft.checkpointDir` so an executor loss at production scale
+    // re-reads one round's state instead of replaying the chain).
+    // The pair plan materializes BEFORE symmetrizing — the union's two
     // branches otherwise each re-execute the (possibly expensive)
-    // upstream near-dup computation
-    val p0 = PartitionUtil.materialize(
-      pairs.select(col("id_a"), col("id_b")), checkpointDir)
-    // driver fast path — the graph-family bounded-collect pattern
-    // (Graph.scala header note): near-dup pair sets are output-bounded
-    // and tiny next to the corpus, while each distributed CC round
-    // costs 2 joins + 1 agg + a convergence count of pure stage
-    // latency. Below the cap the SAME min-label + pointer-jumping
-    // iteration (same rounds, same maxIters accounting, same loud
-    // non-convergence failure) runs on the collected pairs. The
-    // distributed loop is the fallback for pair sets that outgrow the
-    // cap (a pathological corpus where near-everything collides).
-    if (p0.count() <=
-        pairs.sparkSession.conf.get("graft.dedup.maxDriverPairs", "2000000").toLong) {
+    // upstream near-dup computation — in the graph family's shared
+    // preamble (Graph.stage): near-dup pair sets are output-bounded and
+    // tiny next to the corpus, while each distributed CC round costs
+    // 2 joins + 1 agg + a convergence count of pure stage latency, so
+    // below the cap the SAME min-label + pointer-jumping iteration
+    // (same rounds, same maxIters accounting, same loud
+    // non-convergence failure) runs on the collected pairs.
+    val (p0, _, local) = Graph.stage(pairs.select(col("id_a"), col("id_b")),
+      ("graft.dedup.maxDriverPairs", 2000000L))
+    val sym0 = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // fused round 0: from identity labels, one propagation step is just
+    // rep = min(id, min neighbor id) — no distinct, no join
+    def start(sym: DataFrame) = sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
+      .select(col("src").as("id"), least(col("src"), col("m")).as("rep"))
+    def round(sym: DataFrame, labels: DataFrame): DataFrame = {
+      // one propagation step: rep := min(rep, min of neighbors' reps)
+      val nbrMin = sym.join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
+        .groupBy(col("src")).agg(min(col("nbr_rep")).as("nbr_min"))
+      val stepped = labels
+        .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
+        .select(col("id"), col("rep").as("old_rep"),
+          least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("mid"))
+      // pointer jumping: rep := min(rep, rep(rep)) — labels double-hop
+      // per round, so rounds grow as log(diameter), not diameter
+      stepped
+        .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
+        .select(col("id"), col("old_rep"),
+          least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
+    }
+    if (local) {
       import pairs.sparkSession.implicits._
       val pArr = p0.as[(Long, Long)].collect()
       val nbrs = (pArr.map { case (a, b) => (a, b) } ++
@@ -1061,44 +1076,19 @@ object Dedup {
       }
       require(changed == 0L,
         s"dedupGroups did not converge after $maxIters rounds ($changed labels still moving)")
-      import scala.jdk.CollectionConverters._
-      return pairs.sparkSession.createDataFrame(
-        labels.toSeq.map { case (id, rep) => org.apache.spark.sql.Row(id, rep) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq("id", "rep").map(n =>
-          org.apache.spark.sql.types.StructField(n,
-            org.apache.spark.sql.types.LongType, nullable = true))))
+      return Graph.localResult(round(sym0, start(sym0)).select(col("id"), col("rep")),
+        labels.toSeq.map { case (id, rep) => Row(id, rep) })
     }
-    // lazy checkpoint: materialized by the first round's convergence
-    // count — p0 above is eager so the union's two branches read the
-    // stored pair partitions instead of re-running the upstream plan
-    val sym = PartitionUtil.materialize(
-      p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(p0.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      checkpointDir, eager = false)
-    // fused round 0: from identity labels, one propagation step is just
-    // rep = min(id, min neighbor id) — no distinct, no join
-    var labels = PartitionUtil.materialize(
-      sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
-        .select(col("src").as("id"), least(col("src"), col("m")).as("rep")),
-      checkpointDir, eager = false)
+    // lazy checkpoints: materialized by the first round's convergence
+    // count — p0 is eager so the union's two branches read the stored
+    // pair partitions instead of re-running the upstream plan
+    val sym = PartitionUtil.materializeConf(sym0, eager = false)
+    var labels = PartitionUtil.materializeConf(start(sym), eager = false)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
-      // one propagation step: rep := min(rep, min of neighbors' reps)
-      val nbrMin = sym.join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("nbr_rep")).as("nbr_min"))
-      val stepped = labels
-        .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
-        .select(col("id"), col("rep").as("old_rep"),
-          least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("mid"))
-      // pointer jumping: rep := min(rep, rep(rep)) — labels double-hop
-      // per round, so rounds grow as log(diameter), not diameter
-      val jumped = stepped
-        .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
-        .select(col("id"), col("old_rep"),
-          least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
-      val jumpedM = PartitionUtil.materialize(jumped, checkpointDir,
-        eager = false) // the convergence count materializes it
+      // the convergence count materializes the round
+      val jumpedM = PartitionUtil.materializeConf(round(sym, labels), eager = false)
       changed = jumpedM.filter(col("rep") =!= col("old_rep")).count()
       labels = jumpedM
       iter += 1

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics for corpus quality weighting.
@@ -21,103 +23,86 @@ import org.apache.spark.sql.functions._
   * the same recurrence with `//` floor division (identical to `div`
   * for the non-negative values here).
   *
-  * **Scale shape** (100 TB posture): the edge relation joins rank on
-  * `src` and aggregates contributions on `dst` — one shuffle per side
-  * per iteration, volume O(|E|); the rank vector is O(|V|). Edges are
-  * materialized once (out-weights attached before the loop) and every
-  * iteration localCheckpoints its rank vector, so the logical plan
-  * stays constant-depth across iterations (at production scale prefer
-  * reliable `checkpoint(dir)` for executor-loss tolerance, and
-  * pre-partition `edges` by `src` so the per-iteration join reuses one
-  * exchange). Per-order supplier sets are bounded (≤ 7 lineitems per
-  * order in TPC-H), so edge construction is a bounded per-key
-  * self-join, linear in lineitem.
+  * **One runner, two venues.** Every operator materializes its edge
+  * relation once ([[stage]]) and decides its venue once against a cap.
+  * Under the cap it runs on the driver: a distributed round costs
+  * ~210–250 ms of Spark stage machinery at sf0.1 while the integer
+  * arithmetic of a megabyte-scale graph is sub-millisecond. Above the
+  * cap the distributed plans are the 100 TB path: one shuffle per side
+  * per round, volume O(|E|), edges materialized once and state
+  * materialized so the plan stays constant-depth (reliable checkpoints
+  * under `graft.checkpointDir`). The message-passing operators —
+  * pagerank, personalized pagerank, label propagation, cheapest paths
+  * and the neighborhood function — are each ONE [[VertexProgram]]
+  * whose Catalyst Columns both venues evaluate, so the venues agree by
+  * construction. kCore, harmonicCentrality, triangleCounts and
+  * linkPrediction keep bespoke loops and build their driver results
+  * with [[localResult]] against the distributed plan's schema.
+  * GraphSpec pins driver == distributed for every operator.
+  *
+  * Two caps because per-round work differs in shape:
+  *  - `graft.graph.maxDriverEdges` (default 2M): the O(|E|)-per-round
+  *    loops. 2M edges ≈ 64 MB collected.
+  *  - `graft.graph.maxDriverEdgesQuadratic` (default 256k): the
+  *    ball/wedge operators (bounded-radius BFS, HyperBall sketches,
+  *    triangles, link prediction) whose work is Σ|ball| / Σdeg².
   */
 object Graph {
 
   /** Fixed-point scale: rank 1.0 == 1e9. Headroom: rank ≤ Scale, so
-    * `rank * w` stays under Long.MaxValue while w ≤ ~9.2e9 — guarded
-    * in [[pagerank]]. */
+    * `rank * w` stays under Long.MaxValue while w ≤ ~9.2e9; beyond
+    * that the ANSI multiply raises in either venue. */
   val Scale: Long = 1000000000L
 
-  // ---- driver fast path for small graphs -------------------------------
-  //
-  // The round-16/17 dissections (ProfileR16 prx/prx2, ProfileR17 grloop)
-  // measured ~210–250 ms PER ITERATION of the distributed loops at
-  // sf0.1 regardless of AQE, shuffle-partition count, edge partitioning,
-  // checkpoint cadence or rank broadcasting — the cost is Spark's
-  // per-stage machinery (scheduling, codegen, exchange setup), not the
-  // integer arithmetic, which on a graph this size is sub-millisecond.
-  // First-principles (guide §1.1/§1.2): the cheapest execution of a
-  // 10-round integer recurrence over a megabyte-scale edge set is a
-  // tight in-memory loop — so, exactly like the BPE driver-side merge
-  // rounds (`graft.bpe.maxDriverVocab`, round 16) and the k-means fits,
-  // the iteration loops run DRIVER-SIDE when the already-materialized
-  // edge relation is small enough to collect under a conf-bounded cap,
-  // with bit-identical integer arithmetic (Long sums are
-  // reduction-order-free) and the distributed loop untouched as the
-  // 100 TB fallback. The gate reads the edge count the preamble already
-  // computes — no extra pass on either path. GraphSpec pins
-  // driver == distributed on seeded random graphs for every operator.
-  //
-  // Two caps because per-round work differs in shape:
-  //  - maxDriverEdges (default 2M): the O(|E|)-per-round loops
-  //    (pagerank, personalized pagerank, label propagation, min-plus
-  //    relaxation, k-core peeling). 2M edges ≈ 64 MB collected.
-  //  - maxDriverEdgesQuadratic (default 256k): the ball/wedge operators
-  //    (bounded-radius BFS, HyperBall sketches, triangles, link
-  //    prediction) whose work is Σ|ball| / Σdeg², super-linear in |E|.
-  private[graft] def maxDriverEdges(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.graph.maxDriverEdges", "2000000").toLong
-  private[graft] def maxDriverEdgesQuad(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.graph.maxDriverEdgesQuadratic", "262144").toLong
+  private[graft] val LinearCap = ("graft.graph.maxDriverEdges", 2000000L)
+  private[graft] val QuadraticCap = ("graft.graph.maxDriverEdgesQuadratic", 262144L)
 
-  /** Small all-BIGINT result relation for the driver fast paths —
-    * schema (names, LongType, nullable) matches what the distributed
-    * aggregates produce, so the two paths are indistinguishable to
-    * consumers and to the oracle gate. */
-  private def longDf(spark: org.apache.spark.sql.SparkSession,
-                     names: Seq[String], rows: Seq[Array[Long]]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq)).asJava,
-      org.apache.spark.sql.types.StructType(names.map(n =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.LongType, nullable = true))))
+  /** The shared preamble: materialize an operator's edge relation once
+    * and decide the venue once — (edges, |E|, on the driver?). */
+  private[graft] def stage(edges: DataFrame, cap: (String, Long)): (DataFrame, Long, Boolean) = {
+    val e = PartitionUtil.materializeConf(edges)
+    val m = e.count()
+    (e, m, m <= edges.sparkSession.conf.get(cap._1, cap._2.toString).toLong)
   }
 
-  /** Driver kernel: the exact [[pagerank]] / [[personalizedPagerank]]
-    * recurrence over collected (src, dst, w) edges with the
-    * out-weights derived in place. `baseOf` gives each node's restart
-    * term (constant for pagerank, seed-conditional for trustrank);
-    * `rank0` the initial rank. Long sums are order-free, so this is
-    * bit-identical to the distributed rounds. */
+  /** The shared result builder: driver rows typed by the distributed
+    * plan `like` (built lazily, never run), so both venues return the
+    * same schema — names, types and nullability. */
+  private[graft] def localResult(like: DataFrame, rows: Seq[Row]): DataFrame =
+    like.sparkSession.createDataFrame(rows.asJava, like.schema)
+
+  private def weighted(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+
+  /** Canonical undirected simple edges (a < b). */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+
+  /** The integer PageRank recurrence as a vertex program: each node's
+    * rank flows along its out-edges as `(rank * w) div ow` — nothing
+    * when its out-weight is 0, as the oracle's `//` by zero gives a
+    * NULL that SUM skips — the contributions sum per node, and the new
+    * rank is the restart term `base` plus `(17 * sum) div 20`. */
+  private def rankProgram(iters: Int, init: Sizes => Column,
+                          base: Sizes => Column): VertexProgram =
+    VertexProgram("rank", iters, init,
+      message = expr("if(ow = 0, null, (rank * w) div ow)"),
+      combine = Combine.Sum,
+      update = g => base(g) + expr("(17 * coalesce(m, 0)) div 20"),
+      outWeight = Some(col("w")), keepAll = true)
+
+  /** The driver venue of the PageRank program over collected
+    * (src, dst, w) edges, with per-node initial rank and restart term. */
   private[graft] def driverRankLoop(ew: Array[(Long, Long, Long)],
                                     iters: Int,
                                     rank0: Long => Long,
                                     baseOf: Long => Long): Seq[Array[Long]] = {
-    val ow = new java.util.HashMap[Long, Long]()
-    ew.foreach { case (src, _, w) => ow.merge(src, w, (a, b) => a + b) }
-    val nodes = ew.map(_._1).distinct
-    val nodeSet = nodes.toSet
-    var rank = new java.util.HashMap[Long, Long](nodes.length * 2)
-    nodes.foreach(v => rank.put(v, rank0(v)))
-    for (_ <- 1 to iters) {
-      val contrib = new java.util.HashMap[Long, Long](nodes.length * 2)
-      ew.foreach { case (src, dst, w) =>
-        val r = rank.get(src) // every src is a node by construction
-        val c = (r * w) / ow.get(src)
-        if (nodeSet.contains(dst))
-          contrib.merge(dst, c, (a, b) => a + b)
-      }
-      val next = new java.util.HashMap[Long, Long](nodes.length * 2)
-      nodes.foreach { v =>
-        val sc = contrib.getOrDefault(v, 0L)
-        next.put(v, baseOf(v) + (17L * sc) / 20L)
-      }
-      rank = next
-    }
-    nodes.toSeq.map(v => Array(v, rank.get(v)))
+    val e = SparkSession.active.createDataFrame(ew.toSeq).toDF("src", "dst", "w")
+    VertexProgram.onDriver(rankProgram(iters, _ => udf(rank0).apply(col("v")),
+        _ => udf(baseOf).apply(col("v"))), e)
+      .collect().map(r => Array(r.getLong(0), r.getLong(1))).toSeq
   }
 
   /** Supplier co-occurrence edges from lineitem: (src, dst, w) with
@@ -179,123 +164,12 @@ object Graph {
     * recurrence; a pure sink (in-edges only) absorbs contributions
     * but emits no rank row. On a symmetric graph (e.g. co-occurrence)
     * sources and destinations coincide and there is no dangling-mass
-    * term. Returns (v, rank) with rank BIGINT.
-    *
-    * `checkpointDir`: when given, iteration state materializes via
-    * RELIABLE `checkpoint` there instead of `localCheckpoint`, so an
-    * executor loss at production scale replays one round, not the
-    * whole chain. `prePartitionEdges`: hash-partition the edge
-    * relation by `src` ONCE before the loop — each iteration's rank
-    * join then shuffles only the (small) rank vector, never the edge
-    * relation; the one-time exchange pays for itself after the first
-    * iteration at any real |E| (asserted exchange-free in GraphSpec;
-    * measured delta in docs/SCALE.md). */
-  def pagerank(edges: DataFrame, iters: Int = 10,
-               checkpointDir: Option[String] = None,
-               prePartitionEdges: Boolean = false): DataFrame = {
-    // ONE materialization of the (possibly expensive) edge
-    // construction — the narrow (src, dst, w) relation everything else
-    // derives from. Its row count gates the driver fast path; on the
-    // distributed path the out-weight join then reads materialized
-    // blocks, so the edge build is guaranteed to run exactly once.
-    val e0m = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      checkpointDir)
-    val mEdges = e0m.count()
-    // driver fast path (see the header note): the 10 integer rounds —
-    // and the whole preamble (out-weights, |V|, max-w guard) — run on
-    // the collected edges; no vertex-stats pass, no out-weight join
-    if (mEdges <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0m.as[(Long, Long, Long)].collect()
-      val n = ewArr.iterator.map(_._1).toSet.size.toLong
-      require(n > 0, "pagerank: empty edge set")
-      val maxW = if (ewArr.isEmpty) 0L else ewArr.iterator.map(_._3).max
-      require(maxW <= Long.MaxValue / Scale,
-        s"pagerank: edge weight $maxW would overflow rank*w at scale $Scale")
-      val base0 = (3L * Scale) / (20L * n)
-      return longDf(edges.sparkSession, Seq("v", "rank"),
-        driverRankLoop(ewArr, iters, _ => Scale / n, _ => base0))
-    }
-    val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    // loop-invariant edge relation with out-weights attached once;
-    // eagerly materialized so no iteration re-runs edge construction
-    val ew0 = PartitionUtil.materialize(
-      e0m.join(outw, Seq("src"))
-        .select(col("src"), col("dst"), col("w"), col("ow")),
-      checkpointDir)
-    // ONE materialized |V|-sized vertex-stats relation + ONE tiny
-    // aggregate over it replace the preamble's three separate
-    // edge-scan jobs (stats agg, node materialization, src/dst
-    // mismatch probe) — guide §1.2, fewer passes; every preamble fact
-    // (|V|, |E|, max w, zero-indegree / sink flags, the node set
-    // itself) reads off the same pass
-    val vstats = vertexStats(ew0, checkpointDir)
-    val g = vstats.agg(max(col("mw")).as("mw"), count(col("src")).as("n"),
-      sum(col("cnt")).as("m"),
-      max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
-      max(when(col("src").isNull, 1).otherwise(0)).as("sk")).head()
-    val maxW = Option(g.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val n = g.getLong(1)
-    val m = Option(g.get(2)).fold(0L)(_.asInstanceOf[Long])
-    require(n > 0, "pagerank: empty edge set")
-    require(maxW <= Long.MaxValue / Scale,
-      s"pagerank: edge weight $maxW would overflow rank*w at scale $Scale")
-    // size the per-iteration jobs to the graph, not the session: ~2M
-    // edges per partition (narrow coalesce over the checkpointed
-    // blocks — no shuffle), capped at the inherited partitioning so a
-    // genuinely large graph keeps its parallelism. Without this, a
-    // small graph pays 10 iterations of full-width task launches —
-    // measured 4x slower at |E| ~ 10^4.
-    val parts = math.max(1L,
-      math.min(ew0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
-    // pre-partitioned: ONE hash exchange on src, cached via persist()
-    // — an InMemoryRelation KEEPS its output partitioning (a
-    // checkpoint's LogicalRDD does not under AQE), so every
-    // iteration's rank join sees an already-partitioned edge side and
-    // shuffles only the rank vector (asserted in GraphSpec). Lost
-    // cached blocks recompute from the materialized ew0 — one shuffle,
-    // bounded lineage. Default: narrow coalesce, no shuffle at all —
-    // right when iters is small or the graph fits a few partitions.
-    val ew =
-      if (prePartitionEdges) {
-        val p = ew0.repartition(parts, col("src")).persist()
-        p.count()
-        p
-      } else ew0.coalesce(parts)
-    val base = (3L * Scale) / (20L * n) // 0.15/N in fixed point
-    // node set = the non-null-src rows of the already-materialized
-    // vertex stats — no separate distinct+materialize job
-    val nodes = vstats.filter(col("src").isNotNull).select(col("src").as("v"))
-    // Both iteration paths must return the SAME row set: `nodes`
-    // (distinct src). The fast path keys each step's rank vector off
-    // the contribution aggregate (grouped by dst), which equals
-    // `nodes` only when src-set == dst-set — so it is taken only when
-    // (a) no node has out-edges without in-edges (such a node gets no
-    // contribution row yet must keep contributing its constant `base`
-    // rank), and (b) no pure sink exists (a dst-only node would gain
-    // a spurious rank row). Both hold for any symmetric graph, e.g.
-    // co-occurrence. The node left-join then drops out — one less
-    // shuffle per iteration, and the remaining join+agg chain is
-    // reference-free so lineage can accumulate safely between the
-    // every-5th-iteration checkpoints (measured 2.6x faster at
-    // |E| ~ 10^4; at large |E| the join+agg dominates either way).
-    val needNodeJoin = g.getInt(3) == 1 || g.getInt(4) == 1
-    var rank = nodes.select(col("v"), lit(Scale / n).as("rank"))
-    for (k <- 1 to iters) {
-      val stepped = pagerankStep(ew, rank, base,
-        if (needNodeJoin) Some(nodes) else None)
-      // slow path: checkpoint every round (nodes + contrib both derive
-      // from ew — chaining would self-join ambiguous lineage); fast
-      // path: bound plan depth without a per-iteration job
-      rank =
-        if (needNodeJoin || k % 5 == 0 || k == iters)
-          PartitionUtil.materialize(stepped, checkpointDir)
-        else stepped
-    }
-    if (prePartitionEdges) ew.unpersist(false) // rank is materialized
-    rank
-  }
+    * term. Returns (v, rank) with rank BIGINT. */
+  def pagerank(edges: DataFrame, iters: Int = 10): DataFrame =
+    VertexProgram.run(pagerankProgram(iters), weighted(edges), LinearCap)
+
+  private[graft] def pagerankProgram(iters: Int): VertexProgram =
+    rankProgram(iters, g => lit(Scale / g.n), g => lit(3 * Scale / 20 / g.n))
 
   /** Personalized PageRank (TrustRank-style) from a SEED SET: the
     * random walk teleports only to seeds, so rank measures proximity
@@ -307,108 +181,15 @@ object Graph {
     * `rankₜ₊₁(v) = [v∈S]·(3·Scale)/(20·|S|) + (17·contrib)/20`.
     * Every node of the graph appears in the output (non-seeds far
     * from any seed simply converge to 0) — the row set is the
-    * distinct-src node set, like pagerank.
-    *
-    * Scale shape: identical to [[pagerank]] — one rank join on src +
-    * one contribution agg on dst per iteration, O(|E|); the seed flag
-    * rides on the materialized node relation, so the per-iteration
-    * node join (needed anyway: the base term is per-node) adds no
-    * extra pass. Same `checkpointDir` / `prePartitionEdges` knobs. */
+    * distinct-src node set, like pagerank. */
   def personalizedPagerank(edges: DataFrame, isSeed: Column => Column,
-                           iters: Int = 10,
-                           checkpointDir: Option[String] = None,
-                           prePartitionEdges: Boolean = false): DataFrame = {
-    // same single-materialization preamble as [[pagerank]]
-    val e0m = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      checkpointDir)
-    val mEdges = e0m.count()
-    // driver fast path (see the header note). The seed predicate is a
-    // Column, so it evaluates over a LOCAL relation of the node ids —
-    // one LocalTableScan job, no cluster pass.
-    if (mEdges <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0m.as[(Long, Long, Long)].collect()
-      require(ewArr.nonEmpty, "personalizedPagerank: empty edge set")
-      val maxWd = ewArr.iterator.map(_._3).max
-      require(maxWd <= Long.MaxValue / Scale,
-        s"personalizedPagerank: edge weight $maxWd would overflow rank*w at scale $Scale")
-      val nodes = ewArr.map(_._1).distinct
-      val seedSet = longDf(edges.sparkSession, Seq("v"), nodes.toSeq.map(Array(_)))
-        .filter(isSeed(col("v")).cast("boolean")).as[Long].collect().toSet
-      require(seedSet.nonEmpty,
-        "personalizedPagerank: seed predicate matched no node")
-      val baseD = (3L * Scale) / (20L * seedSet.size)
-      return longDf(edges.sparkSession, Seq("v", "rank"),
-        driverRankLoop(ewArr, iters,
-          v => if (seedSet.contains(v)) Scale / seedSet.size else 0L,
-          v => if (seedSet.contains(v)) baseD else 0L))
-    }
-    val outw = e0m.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val ew0 = PartitionUtil.materialize(
-      e0m.join(outw, Seq("src"))
-        .select(col("src"), col("dst"), col("w"), col("ow")),
-      checkpointDir)
-    // the same fused preamble as [[pagerank]]: one materialized
-    // vertex-stats pass + one tiny aggregate replace the separate
-    // stats scan, seeded-node materialization, seed count and
-    // src/dst-mismatch probe (4 sequential jobs -> 2); the seed flag
-    // is a pure function of the node id, so |seeds| rides the same
-    // aggregate
-    val vstats = vertexStats(ew0, checkpointDir)
-    val g = vstats.agg(max(col("mw")).as("mw"), sum(col("cnt")).as("m"),
-      max(when(col("dst").isNull, 1).otherwise(0)).as("zi"),
-      max(when(col("src").isNull, 1).otherwise(0)).as("sk"),
-      sum(when(col("src").isNotNull && isSeed(col("src")).cast("boolean"), 1L)
-        .otherwise(0L)).as("nseeds")).head()
-    val maxW = Option(g.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val m = Option(g.get(1)).fold(0L)(_.asInstanceOf[Long])
-    require(m > 0, "personalizedPagerank: empty edge set")
-    require(maxW <= Long.MaxValue / Scale,
-      s"personalizedPagerank: edge weight $maxW would overflow rank*w at scale $Scale")
-    val parts = math.max(1L,
-      math.min(ew0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
-    val ew =
-      if (prePartitionEdges) {
-        val p = ew0.repartition(parts, col("src")).persist()
-        p.count()
-        p
-      } else ew0.coalesce(parts)
-    // seed flag rides on the node relation — ONE boolean column
-    // projected off the materialized vertex stats, no separate seed
-    // join anywhere in the loop and no extra materialization job
-    val seeded = vstats.filter(col("src").isNotNull)
-      .select(col("src").as("v"), isSeed(col("src")).cast("boolean").as("s"))
-    val nSeeds = Option(g.get(4)).fold(0L)(_.asInstanceOf[Long])
-    require(nSeeds > 0, "personalizedPagerank: seed predicate matched no node")
-    val base = (3L * Scale) / (20L * nSeeds)
-    // fast path (the pagerank pattern, measured on the q130 graph):
-    // when src and dst sets coincide the per-round seeded left join
-    // drops out — the seed flag is a pure function of the node id, so
-    // it evaluates dst-side ON the edge relation with no join and no
-    // extra shuffle (preserving a prePartitionEdges layout), and each
-    // round is ONE join + ONE agg ([[pprFastStep]]). One fused probe
-    // job decides ([[srcDstMismatch]]); asymmetric graphs keep the
-    // seeded-join path.
-    val fast = !(g.getInt(2) == 1 || g.getInt(3) == 1)
-    val ewS = if (fast)
-      ew.withColumn("sd", isSeed(col("dst")).cast("boolean")) else ew
-    var rank = seeded.select(col("v"),
-      when(col("s"), lit(Scale / nSeeds)).otherwise(lit(0L)).as("rank"))
-    for (k <- 1 to iters) {
-      val stepped =
-        if (fast) pprFastStep(ewS, rank, base)
-        else pprStep(ew, seeded, rank, base)
-      // seeded and the contrib chain both bottom out in materialized
-      // relations, so lineage accumulates safely between every-5th
-      // checkpoints — the pagerank fast-path pattern
-      rank =
-        if (k % 5 == 0 || k == iters)
-          PartitionUtil.materialize(stepped, checkpointDir)
-        else stepped
-    }
-    if (prePartitionEdges) ew.unpersist(false)
-    rank
+                           iters: Int = 10): DataFrame =
+    VertexProgram.run(trustProgram(isSeed, iters), weighted(edges), LinearCap)
+
+  private[graft] def trustProgram(isSeed: Column => Column, iters: Int): VertexProgram = {
+    def onSeeds(mass: Long)(g: Sizes) =
+      when(col("seed"), lit(mass / g.seeds)).otherwise(lit(0L))
+    rankProgram(iters, onSeeds(Scale), onSeeds(3 * Scale / 20)).copy(seed = Some(isSeed))
   }
 
   /** DuckDB oracle for [[personalizedPagerank]] over the supplier
@@ -440,101 +221,6 @@ object Graph {
       " ORDER BY trust_scaled DESC, s_suppkey"
   }
 
-  /** ONE personalized-PageRank round, un-materialized (exposed for
-    * plan audits, same as [[pagerankStep]]): the contribution
-    * join+agg, then the seed-conditional restart riding the `seeded`
-    * node relation's boolean — still exactly two joins, no extra
-    * seed join anywhere. */
-  /** Does the node (distinct-src) set differ from the dst set — i.e.
-    * does some source have no in-edges, or some destination no
-    * out-edges? ONE fused job for what used to be two limit(1)
-    * anti-join probes (guide §1.2: fewer passes): a full outer join
-    * of the two distinct sets, a null on either side flagging its
-    * mismatch class. Both distincts are map-side-combined O(|V|)
-    * aggregations; the join is |V|-sized. */
-  /** ONE materialized |V|-sized per-vertex stats relation for the
-    * pagerank-family preambles: the distinct-src rows carry their
-    * per-src edge count and max weight, full-outer-joined against the
-    * distinct dst set — so the node set (src non-null), |E| (sum of
-    * counts), max w, the zero-indegree flag (dst-side null) and the
-    * sink flag (src-side null) all read off the SAME single pass over
-    * the edge relation instead of three separate preamble jobs
-    * (guide §1.2: fewer passes). Cost: two map-side-combined O(|E|)
-    * aggregations + one |V|-sized join, the same volume the old
-    * mismatch probe alone paid. */
-  private[graft] def vertexStats(ew0: DataFrame,
-                                 checkpointDir: Option[String]): DataFrame =
-    PartitionUtil.materialize(
-      ew0.groupBy(col("src"))
-        .agg(count(lit(1)).as("cnt"), max(col("w")).as("mw"))
-        .join(ew0.select(col("dst")).distinct(), col("src") === col("dst"), "full")
-        .select(col("src"), col("cnt"), col("mw"), col("dst")),
-      checkpointDir)
-
-  private[graft] def srcDstMismatch(nodes: DataFrame, ew: DataFrame): Boolean = {
-    val r = nodes
-      .join(ew.select(col("dst")).distinct(), col("v") === col("dst"), "full")
-      .agg(max(when(col("dst").isNull, 1).otherwise(0)).as("zero_indeg"),
-           max(when(col("v").isNull, 1).otherwise(0)).as("sink")).head()
-    r.getInt(0) == 1 || r.getInt(1) == 1
-  }
-
-  /** ONE personalized-PageRank round on the FAST path — valid exactly
-    * when the node (src) set equals the dst set (no zero-indegree
-    * source, no pure sink; any symmetric graph qualifies), so the
-    * contribution aggregate's key set IS the node set and the
-    * seed-conditional restart can ride a dst-side seed flag evaluated
-    * on the edge relation itself: ONE join + ONE agg per round, the
-    * [[pagerankStep]] fast shape, with the per-round seeded left join
-    * gone. The flag is constant per dst, so max() over the group
-    * recovers it exactly; sc is never null here (every node has an
-    * in-edge), so `(17 * sc) div 20` equals the slow path's
-    * coalesce'd term row for row. */
-  private[graft] def pprFastStep(ewS: DataFrame, rank: DataFrame,
-                                 base: Long): DataFrame =
-    ewS.join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-      .select(col("dst").as("v"), col("sd"), expr("(rank * w) div ow").as("c"))
-      .groupBy(col("v"))
-      .agg(max(col("sd")).as("s"), sum(col("c")).as("sc"))
-      .select(col("v"),
-        (when(col("s"), lit(base)).otherwise(lit(0L))
-          + expr("(17 * sc) div 20")).as("rank"))
-
-  private[graft] def pprStep(ew: DataFrame, seeded: DataFrame,
-                             rank: DataFrame, base: Long): DataFrame = {
-    val contrib = ew
-      .join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-      .select(col("dst").as("v"), expr("(rank * w) div ow").as("c"))
-      .groupBy(col("v")).agg(sum(col("c")).as("sc"))
-    seeded.join(contrib, Seq("v"), "left")
-      .select(col("v"),
-        (when(col("s"), lit(base)).otherwise(lit(0L))
-          + expr("(17 * coalesce(sc, 0L)) div 20")).as("rank"))
-  }
-
-  /** ONE synchronous PageRank round, un-materialized — the join+agg
-    * chain the loop repeats, exposed so its physical plan can be
-    * audited directly (the loop's materialization hides it behind a
-    * LogicalRDD scan): join rank onto the edge relation by src,
-    * aggregate contributions by dst, re-attach `nodes` when the
-    * graph is asymmetric. */
-  private[graft] def pagerankStep(ew: DataFrame, rank: DataFrame, base: Long,
-                                  nodes: Option[DataFrame]): DataFrame = {
-    val contrib = ew
-      .join(rank.select(col("v").as("src"), col("rank")), Seq("src"))
-      .select(col("dst").as("v"), expr("(rank * w) div ow").as("c"))
-      .groupBy(col("v")).agg(sum(col("c")).as("sc"))
-    nodes match {
-      case Some(ns) =>
-        ns.join(contrib, Seq("v"), "left")
-          .select(col("v"),
-            (lit(base) + expr("(17 * coalesce(sc, 0L)) div 20")).as("rank"))
-      case None =>
-        contrib.select(col("v"),
-          (lit(base) + expr("(17 * sc) div 20")).as("rank"))
-    }
-  }
-
   /** Per-node triangle counts over an undirected edge set (the
     * clustering-coefficient numerator — community density signal for
     * link-graph quality weighting). Each undirected edge is oriented
@@ -556,39 +242,29 @@ object Graph {
     * equi-joins; the closing semi-join short-circuits per wedge and
     * no triple materializes beyond the wedge set. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    // driver fast path (see the header note; quadratic cap — wedge
-    // work): per edge, every common neighbour is one triangle corner
-    // credit, so each corner collects exactly one credit per triangle
-    if (e.count() <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e.as[(Long, Long)].collect()
-      val nbr = new java.util.HashMap[Long, java.util.HashSet[java.lang.Long]]()
-      def ns(v: Long) = {
-        var s = nbr.get(v)
-        if (s == null) { s = new java.util.HashSet[java.lang.Long](); nbr.put(v, s) }
-        s
-      }
-      ewArr.foreach { case (a, b) => ns(a).add(b); ns(b).add(a) }
-      val tri = new java.util.HashMap[Long, Long]()
-      ewArr.foreach { case (a, b) =>
-        val (small, large) =
-          if (ns(a).size <= ns(b).size) (ns(a), ns(b)) else (ns(b), ns(a))
-        small.forEach { c => if (large.contains(c))
-          tri.merge(c.longValue(), 1L, (x, y) => x + y) }
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      tri.forEach { (v, n) => out += Array(v, n) }
-      return longDf(edges.sparkSession, Seq("v", "n_triangles"), out.toSeq)
+    val (e, _, local) = stage(undirected(edges), QuadraticCap)
+    if (!local) return trianglesOn(e, PartitionUtil.materializeConf(_))
+    // per edge, every common neighbour is one triangle corner credit,
+    // so each corner collects exactly one credit per triangle
+    import edges.sparkSession.implicits._
+    val ewArr = e.as[(Long, Long)].collect()
+    val nbr = (ewArr ++ ewArr.map(_.swap)).groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val corners = ewArr.toSeq.flatMap { case (a, b) =>
+      if (nbr(a).size <= nbr(b).size) nbr(a).filter(nbr(b)) else nbr(b).filter(nbr(a))
     }
+    localResult(trianglesOn(e, identity), corners.groupMapReduce(identity)(_ => 1L)(_ + _)
+      .map { case (v, n) => Row(v, n) }.toSeq)
+  }
+
+  /** The distributed triangle plan over canonical edges; `mat`
+    * materializes the oriented edge set the wedge joins read thrice. */
+  private def trianglesOn(e: DataFrame, mat: DataFrame => DataFrame): DataFrame = {
     val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     // orient each edge low→high by (degree, id); keep the head's
     // (degree, id) key so the wedge join can order its two spokes
     // without a third degree lookup
-    val dir = e
+    val dir = mat(e
       .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
       .select(
@@ -598,8 +274,7 @@ object Graph {
         .otherwise(
           struct(col("b").as("u"), col("a").as("x"), col("da").as("dx")))
         .as("s"))
-      .select(col("s.u").as("u"), col("s.x").as("x"), col("s.dx").as("dx"))
-      .localCheckpoint()
+      .select(col("s.u").as("u"), col("s.x").as("x"), col("s.dx").as("dx")))
     // wedges u→v, u→w with v strictly before w in (degree, id) order:
     // each unordered spoke pair counted once, and the closing edge
     // {v, w} — if present — is oriented v→w by construction
@@ -622,9 +297,7 @@ object Graph {
     * wedges); `false` is the naive id-order, where the same hub
     * pivots C(d, 2) wedges. */
   def wedgeVolume(edges: DataFrame, degreeOrdered: Boolean): Long = {
-    val e = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val e = undirected(edges)
     val pivots =
       if (!degreeOrdered) e.select(col("a").as("u"))
       else {
@@ -640,7 +313,6 @@ object Graph {
       .agg(sum(expr("od * (od - 1) div 2")).as("wedges")).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
-
   /** Bounded-radius harmonic centrality: H(v) = Σ_{0<d(u,v)≤R} 1/d —
     * the closeness-family centrality that handles disconnected graphs
     * gracefully (unreachable nodes contribute 0, not ∞), used as a
@@ -659,41 +331,32 @@ object Graph {
     * KMV/HLL sketch family this engine already carries). Each round:
     * one |frontier|·avg-degree equi-join + one anti join + distinct,
     * all hash-shuffled on (s, v); state materializes per round. */
-  def harmonicCentrality(edges: DataFrame, radius: Int = 3,
-                         checkpointDir: Option[String] = None): DataFrame = {
+  def harmonicCentrality(edges: DataFrame, radius: Int = 3): DataFrame = {
     require(radius >= 1, s"harmonicCentrality: radius must be >= 1, got $radius")
-    val e0 = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct(),
-      checkpointDir)
-    val m = e0.count()
-    // driver fast path (see the header note; the quadratic cap — this
-    // is Σ|ball| work): multi-source BFS, first distance wins
-    if (m <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0.as[(Long, Long)].collect()
-      val adj = ewArr.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val hsum = new java.util.HashMap[Long, Long]()
-      val nreach = new java.util.HashMap[Long, Long]()
-      adj.keys.foreach { s =>
-        val seen = scala.collection.mutable.Set[Long](s)
-        var frontier: Seq[Long] = Seq(s)
-        for (d <- 1 to radius; if frontier.nonEmpty) {
-          val next = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-            .distinct.filterNot(seen)
-          next.foreach { v =>
-            seen += v
-            hsum.merge(v, 1000000L / d, (a, b) => a + b)
-            nreach.merge(v, 1L, (a, b) => a + b)
-          }
-          frontier = next
-        }
+    val (e, m, local) = stage(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")).distinct(), QuadraticCap)
+    if (!local) return harmonicOn(e, m, radius, PartitionUtil.materializeConf(_))
+    // multi-source BFS, first distance wins
+    import edges.sparkSession.implicits._
+    val adj = e.as[(Long, Long)].collect().groupMap(_._1)(_._2)
+    // (v, d) for every v first reached from some source at hop d
+    val reached = adj.keys.toSeq.flatMap { s =>
+      var seen = Set(s)
+      var frontier = Seq(s)
+      (1 to radius).flatMap { d =>
+        frontier = frontier.flatMap(adj.getOrElse(_, Array.empty[Long])).distinct.filterNot(seen)
+        seen ++= frontier
+        frontier.map(_ -> d)
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      hsum.forEach { (v, h) => out += Array(v, h, nreach.get(v)) }
-      return longDf(edges.sparkSession, Seq("v", "harmonic_q6", "n_reached"),
-        out.toSeq)
     }
+    localResult(harmonicOn(e, m, radius, identity), reached.groupBy(_._1).map { case (v, ds) =>
+      Row(v, ds.map(1000000L / _._2).sum, ds.size.toLong) }.toSeq)
+  }
+
+  /** The distributed BFS of [[harmonicCentrality]]; `mat` materializes
+    * each round's frontier. */
+  private def harmonicOn(e0: DataFrame, m: Long, radius: Int,
+                         mat: DataFrame => DataFrame): DataFrame = {
     // size per-hop jobs to the graph (the pagerank pattern): a small
     // graph otherwise pays `radius` rounds of full-width task launches
     val e = e0.coalesce(math.max(1L, math.min(
@@ -705,17 +368,11 @@ object Graph {
     // pairs are the only new state, so checkpoint I/O is O(Σ|ball|)
     // total, not O(R·Σ|ball|); the anti join probes the union, which
     // scans R materialized block sets — R = radius, a small constant).
-    val frontiers = scala.collection.mutable.ArrayBuffer(
-      PartitionUtil.materialize(
-        e.select(col("src").as("s")).distinct()
-          .select(col("s"), col("s").as("v"), lit(0L).as("d")),
-        checkpointDir))
-    for (k <- 1 to radius) {
-      val all = frontiers.reduce(_ union _)
-      val next = PartitionUtil.materialize(
-        harmonicHop(e, frontiers.last, all, k), checkpointDir)
-      frontiers += next
-    }
+    val frontiers = scala.collection.mutable.ArrayBuffer(mat(
+      e.select(col("src").as("s")).distinct()
+        .select(col("s"), col("s").as("v"), lit(0L).as("d"))))
+    for (k <- 1 to radius)
+      frontiers += mat(harmonicHop(e, frontiers.last, frontiers.reduce(_ union _), k))
     frontiers.reduce(_ union _).filter(col("d") > 0)
       .groupBy(col("v"))
       .agg(sum(expr("1000000 div d")).as("harmonic_q6"),
@@ -779,89 +436,36 @@ object Graph {
     * (v, r, k_used, kth, nb_est) where nb_est counts the ball
     * INCLUDING v itself.
     *
+    *
     * Scale shape: per round one |E|-bounded join + one
-    * map-side-combined sketch-merge aggregation; self-loops carry
-    * each node's own sketch through the same merge (no separate
+    * map-side-combined sketch-merge aggregation; each node's own
+    * sketch joins the same merge (the program's `withOld`, no separate
     * union-with-previous pass); state materializes per round. */
-  def neighborhoodFunction(edges: DataFrame, radius: Int = 3, k: Int = 32,
-                           checkpointDir: Option[String] = None): DataFrame = {
+  def neighborhoodFunction(edges: DataFrame, radius: Int = 3, k: Int = 32): DataFrame = {
     require(radius >= 1, s"neighborhoodFunction: radius must be >= 1")
     require(k >= 1, s"neighborhoodFunction: k must be >= 1")
-    val spark = edges.sparkSession
-    graft.functions.ContentHashExpression.register(spark)
-    val h62 = shiftrightunsigned(
-      graft.functions.ContentHashExpression.contentHash64(col("v").cast("string")), 2)
-    val merge = udaf(new graft.functions.KmvMergeAggregator(k))
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val nodes = e0.select(col("src").as("v")).distinct()
-    val eM = PartitionUtil.materialize(
-      e0.union(nodes.select(col("v").as("src"), col("v").as("dst"))),
-      checkpointDir)
-    val m = eM.count()
-    // driver fast path (see the header note; quadratic cap — per-round
-    // work is O(|E|·k) sketch merges): the identical bottom-k sketch
-    // recurrence with the identical content hash and integer estimator
-    if (m <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = eM.as[(Long, Long)].collect() // includes the self-loops
-      val adj = ewArr.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      var hb = adj.keysIterator.map { v =>
-        v -> Array(graft.functions.ContentHashUtil.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(v.toString)) >>> 2)
-      }.toMap
-      def bottomK(xs: Array[Long]): Array[Long] = {
-        val d = xs.distinct
-        java.util.Arrays.sort(d)
-        d.take(k)
-      }
-      def est(sk: Array[Long]): Long =
-        if (sk.length < k) sk.length.toLong
-        else (BigInt(k - 1) * BigInt(4611686018427387904L) / BigInt(sk.last)).toLong
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      for (r <- 1 to radius) {
-        hb = adj.map { case (v, ds) =>
-          v -> bottomK(ds.flatMap(d => hb.getOrElse(d, Array.empty[Long])))
-        }
-        hb.foreach { case (v, sk) =>
-          out += Array(v, r.toLong, sk.length.toLong, sk.last, est(sk))
-        }
-      }
-      return longDf(edges.sparkSession,
-        Seq("v", "r", "k_used", "kth", "nb_est"), out.toSeq)
-    }
-    // size per-round jobs to the graph (the pagerank pattern)
-    val e = eM.coalesce(math.max(1L, math.min(
-      eM.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt)
-    var hb = PartitionUtil.materialize(
-      nodes.select(col("v"), array(h62).as("sk")), checkpointDir)
+    graft.functions.ContentHashExpression.register(edges.sparkSession)
     val est =
       when(size(col("sk")) < k, size(col("sk")).cast("long"))
         .otherwise(expr(
           s"CAST((CAST(${k - 1} AS DECIMAL(38,0)) * CAST(4611686018427387904 AS DECIMAL(38,0)))" +
             " div CAST(element_at(sk, -1) AS DECIMAL(38,0)) AS BIGINT)"))
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to radius) {
-      hb = PartitionUtil.materialize(
-        hyperballRound(e, hb, merge), checkpointDir)
-      rounds += hb.select(col("v"), lit(r.toLong).as("r"),
-        size(col("sk")).cast("long").as("k_used"),
-        element_at(col("sk"), -1).as("kth"),
-        est.as("nb_est"))
-    }
-    rounds.reduce(_ unionByName _)
+    VertexProgram.run(neighborhoodProgram(radius, k),
+        edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")).distinct(),
+        QuadraticCap)
+      .select(col("v"), col("r"), size(col("sk")).cast("long").as("k_used"),
+        element_at(col("sk"), -1).as("kth"), est.as("nb_est"))
   }
 
-  /** ONE HyperBall round, un-materialized (exposed for plan audits):
-    * join each node's sketch onto its in-edges (the self-loop row
-    * carries the node's own sketch), then ONE map-side-combinable
-    * bottom-k merge aggregation per destination — one join + one agg,
-    * O(|E|·k) shuffle, no window, no second pass. */
-  private[graft] def hyperballRound(e: DataFrame, hb: DataFrame,
-      merge: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =
-    e.join(hb.select(col("v").as("dst"), col("sk")), Seq("dst"))
-      .groupBy(col("src")).agg(merge(col("sk")).as("sk"))
-      .select(col("src").as("v"), col("sk"))
+  /** HyperBall as a vertex program: each node's sketch starts as its
+    * own 62-bit content hash; a round merges its out-neighbors'
+    * sketches and its own, bottom-k, keeping every round. */
+  private[graft] def neighborhoodProgram(radius: Int, k: Int): VertexProgram = {
+    val h62 = shiftrightunsigned(
+      graft.functions.ContentHashExpression.contentHash64(col("v").cast("string")), 2)
+    VertexProgram("sk", radius, _ => array(h62), col("sk"), Combine.BottomK(k),
+      reverse = true, withOld = true, everyRound = true)
+  }
 
   /** DuckDB oracle for [[neighborhoodFunction]] on the strong-tie
     * graph: the identical sketch recurrence with list operations —
@@ -918,62 +522,20 @@ object Graph {
     * round materializes (the dedupGroups discipline, not pagerank's
     * every-5th: chaining here would square the plan per round). */
   def cheapestPaths(edges: DataFrame, isSeed: Column => Column,
-                    hops: Int = 4,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    hops: Int = 4): DataFrame = {
     require(hops >= 1, s"cheapestPaths: hops must be >= 1, got $hops")
-    val e0 = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("cost").cast("long").as("cost"))
+    VertexProgram.run(cheapestProgram(isSeed, hops),
+      edges.select(col("src"), col("dst"), col("cost").cast("long").as("w"))
         .filter(col("src") =!= col("dst")),
-      checkpointDir)
-    val m = e0.count()
-    // driver fast path (see the header note): min-plus relaxation over
-    // the collected edges — integer min is reduction-order-free
-    if (m <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0.as[(Long, Long, Long)].collect()
-      val seeds = e0.select(col("src")).distinct()
-        .filter(isSeed(col("src"))).as[Long].collect()
-      require(seeds.nonEmpty, "cheapestPaths: seed predicate matched no node")
-      var dist = new java.util.HashMap[Long, Long](seeds.length * 2)
-      seeds.foreach(v => dist.put(v, 0L))
-      for (_ <- 1 to hops) {
-        val next = new java.util.HashMap[Long, Long](dist.size() * 2)
-        dist.forEach { (v, c) => next.put(v, c) }
-        ewArr.foreach { case (src, dst, cost) =>
-          if (dist.containsKey(src))
-            next.merge(dst, dist.get(src) + cost, (a, b) => math.min(a, b))
-        }
-        dist = next
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      dist.forEach { (v, c) => out += Array(v, c) }
-      return longDf(edges.sparkSession, Seq("v", "cost"), out.toSeq)
-    }
-    // size per-round jobs to the graph (the pagerank pattern)
-    val e = e0.coalesce(math.max(1L, math.min(
-      e0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt)
-    val seeds = e.select(col("src").as("v")).distinct().filter(isSeed(col("v")))
-    var dist = PartitionUtil.materialize(
-      seeds.select(col("v"), lit(0L).as("cost")), checkpointDir)
-    require(dist.limit(1).count() > 0,
-      "cheapestPaths: seed predicate matched no node")
-    for (_ <- 1 to hops) {
-      dist = PartitionUtil.materialize(relaxRound(e, dist), checkpointDir)
-    }
-    dist
+      LinearCap)
   }
 
-  /** ONE Bellman-Ford relax round, un-materialized (exposed for plan
-    * audits): relax every edge from the current distance vector (one
-    * equi-join), union with the kept distances, take the min per node
-    * (one aggregation) — integer min-plus is reduction-order-free, so
-    * the round is deterministic under any physical grouping. */
-  private[graft] def relaxRound(e: DataFrame, dist: DataFrame): DataFrame = {
-    val relaxed = e
-      .join(dist.select(col("v").as("src"), col("cost").as("dc")), Seq("src"))
-      .select(col("dst").as("v"), (col("dc") + col("cost")).as("cost"))
-    dist.union(relaxed).groupBy(col("v")).agg(min(col("cost")).as("cost"))
-  }
+  /** Min-plus relaxation from the seeds: a reached node offers
+    * `cost + w` along each out-edge, and keeps the minimum of its own
+    * cost and every offer. */
+  private[graft] def cheapestProgram(isSeed: Column => Column, hops: Int): VertexProgram =
+    VertexProgram("cost", hops, _ => when(col("seed"), lit(0L)),
+      col("cost") + col("w"), Combine.Min, seed = Some(isSeed), withOld = true)
 
   /** DuckDB oracle for [[cheapestPaths]] on the strong-tie graph with
     * cost = 1e6 div w and seeds `src % seedMod == 0`, hops unrolled. */
@@ -1017,58 +579,43 @@ object Graph {
     * monotonically; edges materialize per round (each round
     * references the survivors twice). Returns (v, core_deg) for the
     * surviving nodes, core_deg = the node's degree inside the core. */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12,
-            checkpointDir: Option[String] = None): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
-    var e = PartitionUtil.materialize(
-      edges.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      checkpointDir)
-    var converged = false
-    var r = 0
-    // carry the surviving-edge count across rounds: the materialize is
-    // eager (its job already counts nothing), so ONE count() action per
-    // peel round suffices — the previous round's count is a variable,
-    // not a second job
-    var mPrev = e.count()
-    // driver fast path (see the header note): iterative peeling over
-    // the collected canonical edge set — peeling is confluent and the
-    // round/convergence accounting mirrors the distributed loop exactly
-    if (mPrev <= maxDriverEdges(edges)) {
+    val (e0, m0, local) = stage(undirected(edges), LinearCap)
+    def coreDeg(e: DataFrame) = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
+    val stuck = s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds"
+    if (local) {
+      // iterative peeling over the collected canonical edge set — the
+      // round/convergence accounting mirrors the distributed loop
       import edges.sparkSession.implicits._
-      var es = e.as[(Long, Long)].collect().toSeq
-      var prev = es.length
-      var conv = false
+      var es = e0.as[(Long, Long)].collect().toSeq
+      def degrees = (es.map(_._1) ++ es.map(_._2)).groupMapReduce(identity)(_ => 1L)(_ + _)
+      var prev = -1
       var rounds = 0
-      while (!conv && rounds < maxRounds) {
-        val deg = (es.map(_._1) ++ es.map(_._2)).groupBy(identity)
-          .view.mapValues(_.length.toLong).toMap
-        val keep = deg.collect { case (v, d) if d >= k => v }.toSet
-        es = es.filter { case (a, b) => keep(a) && keep(b) }
-        conv = es.length == prev
+      while (es.length != prev && rounds < maxRounds) {
         prev = es.length
+        val keep = degrees.collect { case (v, d) if d >= k => v }.toSet
+        es = es.filter { case (a, b) => keep(a) && keep(b) }
         rounds += 1
       }
-      require(conv,
-        s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds")
-      val coreDeg = (es.map(_._1) ++ es.map(_._2)).groupBy(identity)
-        .view.mapValues(_.length.toLong).toMap
-      return longDf(edges.sparkSession, Seq("v", "core_deg"),
-        coreDeg.toSeq.map { case (v, d) => Array(v, d) })
+      require(es.length == prev, stuck)
+      return localResult(coreDeg(e0), degrees.map { case (v, d) => Row(v, d) }.toSeq)
     }
-    while (!converged && r < maxRounds) {
-      val pruned = PartitionUtil.materialize(peelRound(e, k), checkpointDir)
-      val m = pruned.count()
-      converged = m == mPrev
-      mPrev = m
-      e = pruned
+    // the materialize is eager, so ONE count() action per peel round
+    // suffices — the previous round's count is a variable, not a job
+    var e = e0
+    var m = m0
+    var prev = -1L
+    var r = 0
+    while (m != prev && r < maxRounds) {
+      prev = m
+      e = PartitionUtil.materializeConf(peelRound(e, k))
+      m = e.count()
       r += 1
     }
-    require(converged,
-      s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds")
-    e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
+    require(m == prev, stuck)
+    coreDeg(e)
   }
 
   /** ONE k-core peel round, un-materialized (exposed for plan
@@ -1145,91 +692,15 @@ object Graph {
     * bounded by |E|. Like pagerank's fast path, the round chain is
     * reference-free (the edge relation and the seed labels are both
     * materialized), so the label vector checkpoints every 5th round
-    * and at the end — bounded plan depth without a per-round job.
-    * `checkpointDir` switches the materialization to reliable
-    * `checkpoint`; `prePartitionEdges` hash-partitions the edges by
-    * `dst` once so each round's label join shuffles only the label
-    * vector. */
-  def labelPropagation(edges: DataFrame, iters: Int = 5,
-                       checkpointDir: Option[String] = None,
-                       prePartitionEdges: Boolean = false): DataFrame = {
-    val e0 = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
-      checkpointDir)
-    // size per-round jobs to the graph (the pagerank pattern): narrow
-    // coalesce to ~2M edges/partition, capped at inherited parallelism
-    val m = e0.count()
-    // driver fast path (see the header note): synchronous LPA rounds
-    // over the collected edges — argmax by (weight desc, label asc),
-    // the same total order as the distributed struct-min
-    if (m <= maxDriverEdges(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e0.as[(Long, Long, Long)].collect()
-      val nodes = ewArr.map(_._1).distinct
-      var labels = new java.util.HashMap[Long, Long](nodes.length * 2)
-      nodes.foreach(v => labels.put(v, v))
-      for (_ <- 1 to iters) {
-        // wt(src, label) = Σ w over edges whose dst currently holds label
-        val wt = new java.util.HashMap[(Long, Long), Long](ewArr.length / 2)
-        ewArr.foreach { case (src, dst, w) =>
-          if (labels.containsKey(dst))
-            wt.merge((src, labels.get(dst)), w, (a, b) => a + b)
-        }
-        val next = new java.util.HashMap[Long, Long](nodes.length * 2)
-        wt.forEach { (k, sum) =>
-          val (src, label) = k
-          if (next.containsKey(src)) {
-            val cur = next.get(src)
-            val curW = wt.get((src, cur))
-            if (sum > curW || (sum == curW && label < cur)) next.put(src, label)
-          } else next.put(src, label)
-        }
-        labels = next
-      }
-      // the distributed round is an INNER join on dst, so a node whose
-      // neighbors all lost their labels drops out — emit exactly the
-      // final relation's keys, not the initial node set
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      labels.forEach { (v, l) => out += Array(v, l) }
-      return longDf(edges.sparkSession, Seq("v", "label"), out.toSeq)
-    }
-    val parts = math.max(1L,
-      math.min(e0.rdd.getNumPartitions.toLong, m / 2000000L + 1L)).toInt
-    // persist (not checkpoint): InMemoryRelation keeps the hash
-    // partitioning on dst, so each round's label join shuffles only
-    // the label vector — see the pagerank note
-    val e =
-      if (prePartitionEdges) {
-        val p = e0.repartition(parts, col("dst")).persist()
-        p.count()
-        p
-      } else e0.coalesce(parts)
-    var labels = PartitionUtil.materialize(
-      e.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("label")),
-      checkpointDir)
-    for (k <- 1 to iters) {
-      val stepped = lpaRound(e, labels)
-      labels =
-        if (k % 5 == 0 || k == iters)
-          PartitionUtil.materialize(stepped, checkpointDir)
-        else stepped
-    }
-    if (prePartitionEdges) e.unpersist(false) // labels are materialized
-    labels
-  }
+    * and at the end — bounded plan depth without a per-round job. */
+  def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame =
+    VertexProgram.run(lpaProgram(iters), weighted(edges), LinearCap)
 
-  /** ONE synchronous LPA round, un-materialized — join the label
-    * vector onto the edges by dst, sum incident weight per (src,
-    * label), argmax with min-label ties — exposed so the one-join-
-    * two-agg plan shape can be audited directly. */
-  private[graft] def lpaRound(e: DataFrame, labels: DataFrame): DataFrame =
-    e.join(labels.select(col("v").as("dst"), col("label")), Seq("dst"))
-      .groupBy(col("src"), col("label"))
-      .agg(sum(col("w")).as("wt"))
-      .groupBy(col("src"))
-      .agg(min(struct((-col("wt")).as("nw"), col("label"))).as("m"))
-      .select(col("src").as("v"), col("m.label").as("label"))
+  /** Each node adopts the label its out-neighbors carry with the most
+    * total edge weight, ties to the smallest label. */
+  private[graft] def lpaProgram(iters: Int): VertexProgram =
+    VertexProgram("label", iters, _ => col("v"), col("label"), Combine.Mode(col("w")),
+      reverse = true)
 
   /** DuckDB oracle for [[labelPropagation]] on the strong-tie supplier
     * graph: the same recurrence unrolled, argmax as ROW_NUMBER over
@@ -1276,10 +747,7 @@ object Graph {
     val ec = PartitionUtil.materialize(
       edges.select(col("src"), col("dst"), col("w").cast("long").as("w")), None)
     val labels = labelPropagation(ec, iters)
-    val und = ec.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist()
+    val und = undirected(ec).persist()
     val m = und.count()
     val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -1335,9 +803,7 @@ object Graph {
     // materialize the (possibly expensive) edge construction ONCE —
     // both the degree aggregation and the triangle count read it
     val ec = edges.localCheckpoint()
-    val e = ec.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val e = undirected(ec)
     val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     deg.join(triangleCounts(ec), Seq("v"), "left")
@@ -1424,51 +890,33 @@ object Graph {
     * what a cap admits and ScaleProbe reports it on a hub graph. */
   def linkPrediction(edges: DataFrame, maxMiddleDegree: Long, topK: Int): DataFrame = {
     require(maxMiddleDegree >= 2 && topK >= 1, "cap >= 2 and topK >= 1")
-    val e = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    // driver fast path (see the header note; quadratic cap — wedge
-    // work): same capped wedge generation, integer indices, and
+    val (e, _, local) = stage(undirected(edges), QuadraticCap)
+    if (!local) return linkOn(e, maxMiddleDegree, topK)
+    // same capped wedge generation, integer indices, and
     // (cn desc, ra desc, a, b) total order
-    if (e.count() <= maxDriverEdgesQuad(edges)) {
-      import edges.sparkSession.implicits._
-      val ewArr = e.as[(Long, Long)].collect()
-      val edgeSet = ewArr.map { case (a, b) => (a, b) }.toSet
-      val adjM = (ewArr.map { case (a, b) => (a, b) } ++
-        ewArr.map { case (a, b) => (b, a) })
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val deg = adjM.view.mapValues(_.length.toLong).toMap
-      val cn = new java.util.HashMap[(Long, Long), Long]()
-      val ra = new java.util.HashMap[(Long, Long), Long]()
-      adjM.foreach { case (mid, ns) =>
-        val dm = deg(mid)
-        if (dm <= maxMiddleDegree) {
-          val contrib = 1000000L / dm
-          val sorted = ns.sorted
-          var i = 0
-          while (i < sorted.length) {
-            var j = i + 1
-            while (j < sorted.length) {
-              val key = (sorted(i), sorted(j))
-              cn.merge(key, 1L, (x, y) => x + y)
-              ra.merge(key, contrib, (x, y) => x + y)
-              j += 1
-            }
-            i += 1
-          }
-        }
-      }
-      val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-      cn.forEach { (key, c) =>
-        val (a, b) = key
-        if (!edgeSet.contains(key))
-          rows += Array(a, b, c,
-            1000000L * c / (deg(a) + deg(b) - c), ra.get(key))
-      }
-      val top = rows.sortBy(r => (-r(2), -r(4), r(0), r(1))).take(topK)
-      return longDf(edges.sparkSession,
-        Seq("a", "b", "cn", "jaccard_q6", "ra_q6"), top.toSeq)
+    import edges.sparkSession.implicits._
+    val ewArr = e.as[(Long, Long)].collect()
+    val edgeSet = ewArr.toSet
+    val adjM = (ewArr ++ ewArr.map(_.swap))
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    val deg = adjM.view.mapValues(_.length.toLong).toMap
+    val cn = new java.util.HashMap[(Long, Long), Long]()
+    val ra = new java.util.HashMap[(Long, Long), Long]()
+    for ((mid, ns) <- adjM if deg(mid) <= maxMiddleDegree;
+         i <- ns.indices; j <- i + 1 until ns.length) {
+      val key = (ns(i), ns(j))
+      cn.merge(key, 1L, (x, y) => x + y)
+      ra.merge(key, 1000000L / deg(mid), (x, y) => x + y)
     }
+    val rows = cn.asScala.collect { case (key @ (a, b), c) if !edgeSet(key) =>
+      Array(a, b, c, 1000000L * c / (deg(a) + deg(b) - c), ra.get(key))
+    }
+    val top = rows.toSeq.sortBy(r => (-r(2), -r(4), r(0), r(1))).take(topK)
+    localResult(linkOn(e, maxMiddleDegree, topK), top.map(r => Row.fromSeq(r.toSeq)))
+  }
+
+  /** The distributed plan of [[linkPrediction]] over canonical edges. */
+  private def linkOn(e: DataFrame, maxMiddleDegree: Long, topK: Int): DataFrame = {
     val adj = e.select(col("a").as("u"), col("b").as("z"))
       .union(e.select(col("b").as("u"), col("a").as("z")))
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -1496,9 +944,7 @@ object Graph {
     * Σ_m C(deg(m), 2) over middles with deg ≤ cap (cap ≤ 0 → no
     * cap). The ScaleProbe hub row reports capped vs uncapped. */
   def linkWedgeVolume(edges: DataFrame, cap: Long): Long = {
-    val e = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val e = undirected(edges)
     val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     val kept = if (cap <= 0) deg else deg.filter(col("d") <= cap)

@@ -203,15 +203,19 @@ class GraphSpec extends AnyFunSuite with Matchers {
   test("driver fast path == distributed loops (caps forced to 0) for every graph operator") {
     import spark.implicits._
     // seeded random weighted digraph, big enough to exercise every
-    // operator's interesting cases (sinks, zero-indegree, ties)
+    // operator's interesting cases (sinks, zero-indegree, ties), plus a
+    // source 99 whose only out-edges have w = 0: its out-weight is 0,
+    // so it sends no rank in either venue
     val rng = new scala.util.Random(20260819L)
-    val edges = (1 to 400).map { _ =>
+    val edges = ((1 to 400).map { _ =>
       (rng.nextInt(40).toLong, rng.nextInt(40).toLong, (rng.nextInt(9) + 1).toLong)
-    }.distinct.filter(e => e._1 != e._2).toDF("src", "dst", "w")
+    }.distinct.filter(e => e._1 != e._2) ++ Seq((99L, 1L, 0L), (99L, 2L, 0L)))
+      .toDF("src", "dst", "w")
       .localCheckpoint()
-    def rows(df: org.apache.spark.sql.DataFrame): List[Seq[Any]] =
-      df.collect().map(_.toSeq).toList.sortBy(_.mkString(","))
-    def all(): Map[String, List[Seq[Any]]] = Map(
+    // schema (names, types, nullability) and the sorted rows
+    def rows(df: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.types.StructType, List[Seq[Any]]) =
+      (df.schema, df.collect().map(_.toSeq).toList.sortBy(_.mkString(",")))
+    def all(): Map[String, (org.apache.spark.sql.types.StructType, List[Seq[Any]])] = Map(
       "pagerank" -> rows(Graph.pagerank(edges, iters = 4)),
       "ppr" -> rows(Graph.personalizedPagerank(edges,
         v => pmod(v, lit(5)) === 0, iters = 4)),
@@ -219,7 +223,7 @@ class GraphSpec extends AnyFunSuite with Matchers {
       "harmonic" -> rows(Graph.harmonicCentrality(edges, radius = 2)),
       "neighborhood" -> rows(Graph.neighborhoodFunction(edges, radius = 2, k = 8)),
       "cheapest" -> rows(Graph.cheapestPaths(
-        edges.withColumn("cost", expr("1000000 div w")),
+        edges.withColumn("cost", expr("1000000 div (w + 1)")),
         v => pmod(v, lit(5)) === 0, hops = 3)),
       "kcore" -> rows(Graph.kCore(edges, k = 3, maxRounds = 20)),
       "triangles" -> rows(Graph.triangleCounts(edges)),
@@ -230,9 +234,13 @@ class GraphSpec extends AnyFunSuite with Matchers {
     spark.conf.set("graft.graph.maxDriverEdgesQuadratic", "0")
     try {
       val dist = all() // caps 0: every operator runs the distributed loop
+      driver.keys.size shouldBe 10
       driver.keys.foreach { op =>
-        withClue(s"$op driver-vs-distributed:") { dist(op) shouldBe driver(op) }
+        withClue(s"$op driver-vs-distributed schema:") { dist(op)._1 shouldBe driver(op)._1 }
+        withClue(s"$op driver-vs-distributed rows:") { dist(op)._2 shouldBe driver(op)._2 }
       }
+      // the zero-out-weight source keeps its restart rank and sends nothing
+      driver("pagerank")._2.map(_.head) should contain(99L)
     } finally {
       spark.conf.unset("graft.graph.maxDriverEdges")
       spark.conf.unset("graft.graph.maxDriverEdgesQuadratic")
@@ -294,48 +302,38 @@ class GraphSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("prePartitionEdges: identical results; one step drops the edge-side exchange") {
+  test("distributed edge layout: identical results; a round shuffles only the state side") {
     import spark.implicits._
     val g = Seq((1L, 2L, 5L), (2L, 1L, 1L), (2L, 3L, 4L), (3L, 2L, 2L),
       (3L, 1L, 7L), (1L, 3L, 1L))
     val df = g.toDF("src", "dst", "w")
-    // results owe nothing to the physical layout
-    Graph.pagerank(df, 7, prePartitionEdges = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
-      refPagerank(g, 7)
-    val lpaPlain = Graph.labelPropagation(df, 4)
+    // results owe nothing to the venue or the physical layout
+    val lpaDriver = Graph.labelPropagation(df, 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Graph.labelPropagation(df, 4, prePartitionEdges = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe lpaPlain
-    // plan: with the edge relation hash-partitioned on the join key
-    // and persisted (InMemoryRelation keeps its partitioning; a
-    // checkpoint's LogicalRDD does not under AQE), ONE step's join
-    // shuffles only the rank side — broadcast disabled so the tiny
-    // fixture plans like a big graph. The plan text truncates at the
-    // cached subtree: exchanges INSIDE InMemoryRelation are the
-    // one-time cache build, not per-iteration work.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val ewPre = {
-      val e0 = df.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      val outw = e0.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      e0.join(outw, Seq("src"))
-        .select(col("src"), col("dst"), col("w"), col("ow"))
-    }
+    spark.conf.set("graft.graph.maxDriverEdges", "0")
     try {
-      val ewCached = ewPre.repartition(4, col("src")).persist()
-      ewCached.count()
-      val ewPlain = ewPre.localCheckpoint()
-      val rank = ewPlain.select(col("src").as("v")).distinct()
-        .select(col("v"), lit(Graph.Scale / 3).as("rank")).localCheckpoint()
-      def topExchanges(d: org.apache.spark.sql.DataFrame): Int = {
-        val s = d.queryExecution.executedPlan.toString
-        val cut = s.indexOf("InMemoryRelation")
-        "Exchange".r.findAllIn(if (cut < 0) s else s.take(cut)).length
-      }
-      val pre = topExchanges(Graph.pagerankStep(ewCached, rank, 1L, None))
-      val plain = topExchanges(Graph.pagerankStep(ewPlain, rank, 1L, None))
-      withClue(s"pre=$pre plain=$plain: ") { pre should be < plain }
-      ewCached.unpersist(false)
+      Graph.pagerank(df, 7)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe refPagerank(g, 7)
+      Graph.labelPropagation(df, 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe lpaDriver
+    } finally spark.conf.unset("graft.graph.maxDriverEdges")
+    // plan: the runner persists the edges hash-partitioned on the
+    // sender (InMemoryRelation keeps its partitioning; a checkpoint's
+    // LogicalRDD does not under AQE), so ONE round's join reads the
+    // edge side from the cache and shuffles only the rank side —
+    // broadcast disabled so the tiny fixture plans like a big graph
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val plans = graft.pipeline.VertexProgram.clusterPlans(
+        Graph.pagerankProgram(7), df.select(col("src"), col("dst"), col("w")).localCheckpoint())
+      val round = plans.round(plans.init)
+      round.queryExecution.executedPlan.toString should include("InMemoryTableScan")
+      PlanAudit.shufflesCached(round) shouldBe false
+      plans.edges.unpersist(false)
+      // the check itself sees a re-exchanged cached relation
+      val cached = spark.range(100).select((col("id") % 7).as("dst")).persist()
+      PlanAudit.shufflesCached(cached.groupBy(col("dst")).count()) shouldBe true
+      cached.unpersist(false)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
@@ -345,9 +343,14 @@ class GraphSpec extends AnyFunSuite with Matchers {
       (3L, 1L, 7L), (1L, 3L, 1L))
     val df = g.toDF("src", "dst", "w")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toString
-    Graph.pagerank(df, 6, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
-      refPagerank(g, 6)
+    // driver cap 0: the rounds themselves checkpoint, not only the edges
+    spark.conf.set("graft.checkpointDir", dir)
+    spark.conf.set("graft.graph.maxDriverEdges", "0")
+    try {
+      Graph.pagerank(df, 6)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
+        refPagerank(g, 6)
+    } finally Seq("graft.checkpointDir", "graft.graph.maxDriverEdges").foreach(spark.conf.unset)
     // the reliable checkpoint actually wrote rdd state under dir
     import scala.jdk.CollectionConverters._
     val entries = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

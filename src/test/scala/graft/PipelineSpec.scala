@@ -1513,14 +1513,21 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       (math.min(a, b), math.max(a, b))
     }.filter(p => p._1 != p._2) ++ (100L to 140L).map(i => (i, i + 1)))
       .distinct.toDF("id_a", "id_b").localCheckpoint()
-    def rows() = Dedup.dedupGroups(pairs).as[(Long, Long)].collect().sorted.toList
+    // schema (names, types, nullability) and the sorted rows
+    def rows() = {
+      val g = Dedup.dedupGroups(pairs)
+      (g.schema, g.as[(Long, Long)].collect().sorted.toList)
+    }
     val driver = rows()
     // every rep must be its component's minimum (fixpoint property)
-    driver.foreach { case (_, rep) =>
-      driver.find(_._1 == rep).map(_._2) shouldBe Some(rep) }
+    driver._2.foreach { case (_, rep) =>
+      driver._2.find(_._1 == rep).map(_._2) shouldBe Some(rep) }
     spark.conf.set("graft.dedup.maxDriverPairs", "0")
-    try rows() shouldBe driver
-    finally spark.conf.unset("graft.dedup.maxDriverPairs")
+    try {
+      val dist = rows()
+      dist._1 shouldBe driver._1
+      dist._2 shouldBe driver._2
+    } finally spark.conf.unset("graft.dedup.maxDriverPairs")
   }
 
   test("BPE: distributed merge rounds == driver rounds (maxDriverVocab forced to 0), ties + non-ASCII") {
