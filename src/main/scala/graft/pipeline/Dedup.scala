@@ -1014,41 +1014,22 @@ object Dedup {
     // Iterative algorithms MUST truncate lineage every round: each round
     // references the previous labels three times, so without
     // checkpointing the logical plan grows 3^rounds. Each round's result
-    // materializes (localCheckpoint, or a reliable checkpoint under
+    // materializes — localCheckpoint, or a reliable checkpoint under
     // `graft.checkpointDir` so an executor loss at production scale
-    // re-reads one round's state instead of replaying the chain).
-    // The pair plan materializes BEFORE symmetrizing — the union's two
-    // branches otherwise each re-execute the (possibly expensive)
-    // upstream near-dup computation — in the graph family's shared
-    // preamble (Graph.stage): near-dup pair sets are output-bounded and
-    // tiny next to the corpus, while each distributed CC round costs
-    // 2 joins + 1 agg + a convergence count of pure stage latency, so
-    // below the cap the SAME min-label + pointer-jumping iteration
-    // (same rounds, same maxIters accounting, same loud
-    // non-convergence failure) runs on the collected pairs.
+    // re-reads one round's state instead of replaying the chain.
+    // The graph family's shared preamble (Graph.stage) materializes the
+    // pair plan BEFORE symmetrizing — the union's two branches otherwise
+    // each re-execute the (possibly expensive) upstream near-dup
+    // computation — and picks the venue: near-dup pair sets are
+    // output-bounded and tiny next to the corpus, while each distributed
+    // CC round costs 2 joins + 1 agg + a convergence count of pure stage
+    // latency. Below the cap the SAME min-label + pointer-jumping
+    // iteration (same rounds, same maxIters accounting, same loud
+    // non-convergence failure) runs on the collected pairs. The
+    // distributed loop is the fallback for pair sets that outgrow the
+    // cap (a pathological corpus where near-everything collides).
     val (p0, _, local) = Graph.stage(pairs.select(col("id_a"), col("id_b")),
       ("graft.dedup.maxDriverPairs", 2000000L))
-    val sym0 = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
-    // fused round 0: from identity labels, one propagation step is just
-    // rep = min(id, min neighbor id) — no distinct, no join
-    def start(sym: DataFrame) = sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      .select(col("src").as("id"), least(col("src"), col("m")).as("rep"))
-    def round(sym: DataFrame, labels: DataFrame): DataFrame = {
-      // one propagation step: rep := min(rep, min of neighbors' reps)
-      val nbrMin = sym.join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("nbr_rep")).as("nbr_min"))
-      val stepped = labels
-        .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
-        .select(col("id"), col("rep").as("old_rep"),
-          least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("mid"))
-      // pointer jumping: rep := min(rep, rep(rep)) — labels double-hop
-      // per round, so rounds grow as log(diameter), not diameter
-      stepped
-        .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
-        .select(col("id"), col("old_rep"),
-          least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
-    }
     if (local) {
       import pairs.sparkSession.implicits._
       val pArr = p0.as[(Long, Long)].collect()
@@ -1076,19 +1057,40 @@ object Dedup {
       }
       require(changed == 0L,
         s"dedupGroups did not converge after $maxIters rounds ($changed labels still moving)")
-      return Graph.localResult(round(sym0, start(sym0)).select(col("id"), col("rep")),
+      return Graph.localResult(pairs.sparkSession, Graph.longs("id", "rep"),
         labels.toSeq.map { case (id, rep) => Row(id, rep) })
     }
-    // lazy checkpoints: materialized by the first round's convergence
-    // count — p0 is eager so the union's two branches read the stored
-    // pair partitions instead of re-running the upstream plan
-    val sym = PartitionUtil.materializeConf(sym0, eager = false)
-    var labels = PartitionUtil.materializeConf(start(sym), eager = false)
+    // lazy checkpoint: materialized by the first round's convergence
+    // count — p0 above is eager so the union's two branches read the
+    // stored pair partitions instead of re-running the upstream plan
+    val sym = PartitionUtil.materializeConf(
+      p0.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(p0.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      eager = false)
+    // fused round 0: from identity labels, one propagation step is just
+    // rep = min(id, min neighbor id) — no distinct, no join
+    var labels = PartitionUtil.materializeConf(
+      sym.groupBy(col("src")).agg(min(col("dst")).as("m"))
+        .select(col("src").as("id"), least(col("src"), col("m")).as("rep")),
+      eager = false)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
-      // the convergence count materializes the round
-      val jumpedM = PartitionUtil.materializeConf(round(sym, labels), eager = false)
+      // one propagation step: rep := min(rep, min of neighbors' reps)
+      val nbrMin = sym.join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
+        .groupBy(col("src")).agg(min(col("nbr_rep")).as("nbr_min"))
+      val stepped = labels
+        .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
+        .select(col("id"), col("rep").as("old_rep"),
+          least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("mid"))
+      // pointer jumping: rep := min(rep, rep(rep)) — labels double-hop
+      // per round, so rounds grow as log(diameter), not diameter
+      val jumped = stepped
+        .join(labels.select(col("id").as("mid"), col("rep").as("jump")), Seq("mid"), "left")
+        .select(col("id"), col("old_rep"),
+          least(col("mid"), coalesce(col("jump"), col("mid"))).as("rep"))
+      val jumpedM = PartitionUtil.materializeConf(jumped,
+        eager = false) // the convergence count materializes it
       changed = jumpedM.filter(col("rep") =!= col("old_rep")).count()
       labels = jumpedM
       iter += 1
@@ -1101,7 +1103,7 @@ object Dedup {
     // knowing about, not something to paper over.
     require(changed == 0L,
       s"dedupGroups did not converge after $maxIters rounds ($changed labels still moving)")
-    labels.select(col("id"), col("rep"))
+    Graph.nullable(labels.select(col("id"), col("rep")))
   }
 
   /** Canonical representative selection — the final keep/drop decision

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Link-graph analytics for corpus quality weighting.
   *
@@ -36,9 +37,9 @@ import org.apache.spark.sql.functions._
   * and the neighborhood function — are each ONE [[VertexProgram]]
   * whose Catalyst Columns both venues evaluate, so the venues agree by
   * construction. kCore, harmonicCentrality, triangleCounts and
-  * linkPrediction keep bespoke loops and build their driver results
-  * with [[localResult]] against the distributed plan's schema.
-  * GraphSpec pins driver == distributed for every operator.
+  * linkPrediction keep bespoke loops. Every operator returns one
+  * schema in both venues ([[localResult]], [[nullable]]); GraphSpec
+  * pins driver == distributed, schema and rows, for every operator.
   *
   * Two caps because per-round work differs in shape:
   *  - `graft.graph.maxDriverEdges` (default 2M): the O(|E|)-per-round
@@ -65,11 +66,23 @@ object Graph {
     (e, m, m <= edges.sparkSession.conf.get(cap._1, cap._2.toString).toLong)
   }
 
-  /** The shared result builder: driver rows typed by the distributed
-    * plan `like` (built lazily, never run), so both venues return the
-    * same schema — names, types and nullability. */
-  private[graft] def localResult(like: DataFrame, rows: Seq[Row]): DataFrame =
-    like.sparkSession.createDataFrame(rows.asJava, like.schema)
+  /** The shared result builder. Both venues return the operator's
+    * declared columns, every one nullable: the driver types its rows
+    * by `schema`, the distributed result passes through [[nullable]].
+    * (Typing driver rows by a lazily built distributed plan instead
+    * costs ~0.3 s of eager analysis per call on Spark 4.1 — fifty
+    * times the q119 driver rounds.) */
+  private[graft] def localResult(spark: SparkSession, schema: StructType,
+                                 rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  private[graft] def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
+
+  /** `df` with every column nullable: the identity on values, which
+    * the optimizer folds away. */
+  private[graft] def nullable(df: DataFrame): DataFrame =
+    df.select(df.columns.map(c => when(col(c).isNotNull, col(c)).as(c)).toSeq: _*)
 
   private def weighted(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
@@ -85,12 +98,11 @@ object Graph {
     * when its out-weight is 0, as the oracle's `//` by zero gives a
     * NULL that SUM skips — the contributions sum per node, and the new
     * rank is the restart term `base` plus `(17 * sum) div 20`. */
-  private def rankProgram(iters: Int, init: Sizes => Column,
-                          base: Sizes => Column): VertexProgram =
+  private def rankProgram(iters: Int, init: Column, base: Column): VertexProgram =
     VertexProgram("rank", iters, init,
       message = expr("if(ow = 0, null, (rank * w) div ow)"),
       combine = Combine.Sum,
-      update = g => base(g) + expr("(17 * coalesce(m, 0)) div 20"),
+      update = base + expr("(17 * coalesce(m, 0)) div 20"),
       outWeight = Some(col("w")), keepAll = true)
 
   /** The driver venue of the PageRank program over collected
@@ -100,8 +112,8 @@ object Graph {
                                     rank0: Long => Long,
                                     baseOf: Long => Long): Seq[Array[Long]] = {
     val e = SparkSession.active.createDataFrame(ew.toSeq).toDF("src", "dst", "w")
-    VertexProgram.onDriver(rankProgram(iters, _ => udf(rank0).apply(col("v")),
-        _ => udf(baseOf).apply(col("v"))), e)
+    VertexProgram.onDriver(rankProgram(iters, udf(rank0).apply(col("v")),
+        udf(baseOf).apply(col("v"))), e)
       .collect().map(r => Array(r.getLong(0), r.getLong(1))).toSeq
   }
 
@@ -169,7 +181,7 @@ object Graph {
     VertexProgram.run(pagerankProgram(iters), weighted(edges), LinearCap)
 
   private[graft] def pagerankProgram(iters: Int): VertexProgram =
-    rankProgram(iters, g => lit(Scale / g.n), g => lit(3 * Scale / 20 / g.n))
+    rankProgram(iters, expr(s"$Scale div n"), expr(s"${3 * Scale / 20} div n"))
 
   /** Personalized PageRank (TrustRank-style) from a SEED SET: the
     * random walk teleports only to seeds, so rank measures proximity
@@ -187,8 +199,7 @@ object Graph {
     VertexProgram.run(trustProgram(isSeed, iters), weighted(edges), LinearCap)
 
   private[graft] def trustProgram(isSeed: Column => Column, iters: Int): VertexProgram = {
-    def onSeeds(mass: Long)(g: Sizes) =
-      when(col("seed"), lit(mass / g.seeds)).otherwise(lit(0L))
+    def onSeeds(mass: Long) = expr(s"if(seed, $mass div seeds, 0L)")
     rankProgram(iters, onSeeds(Scale), onSeeds(3 * Scale / 20)).copy(seed = Some(isSeed))
   }
 
@@ -243,28 +254,24 @@ object Graph {
     * no triple materializes beyond the wedge set. */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val (e, _, local) = stage(undirected(edges), QuadraticCap)
-    if (!local) return trianglesOn(e, PartitionUtil.materializeConf(_))
-    // per edge, every common neighbour is one triangle corner credit,
-    // so each corner collects exactly one credit per triangle
-    import edges.sparkSession.implicits._
-    val ewArr = e.as[(Long, Long)].collect()
-    val nbr = (ewArr ++ ewArr.map(_.swap)).groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
-    val corners = ewArr.toSeq.flatMap { case (a, b) =>
-      if (nbr(a).size <= nbr(b).size) nbr(a).filter(nbr(b)) else nbr(b).filter(nbr(a))
+    if (local) {
+      // per edge, every common neighbour is one triangle corner credit,
+      // so each corner collects exactly one credit per triangle
+      import edges.sparkSession.implicits._
+      val ewArr = e.as[(Long, Long)].collect()
+      val nbr = (ewArr ++ ewArr.map(_.swap)).groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+      val corners = ewArr.toSeq.flatMap { case (a, b) =>
+        if (nbr(a).size <= nbr(b).size) nbr(a).filter(nbr(b)) else nbr(b).filter(nbr(a))
+      }
+      return localResult(edges.sparkSession, longs("v", "n_triangles"),
+        corners.groupMapReduce(identity)(_ => 1L)(_ + _).map { case (v, n) => Row(v, n) }.toSeq)
     }
-    localResult(trianglesOn(e, identity), corners.groupMapReduce(identity)(_ => 1L)(_ + _)
-      .map { case (v, n) => Row(v, n) }.toSeq)
-  }
-
-  /** The distributed triangle plan over canonical edges; `mat`
-    * materializes the oriented edge set the wedge joins read thrice. */
-  private def trianglesOn(e: DataFrame, mat: DataFrame => DataFrame): DataFrame = {
     val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     // orient each edge low→high by (degree, id); keep the head's
     // (degree, id) key so the wedge join can order its two spokes
     // without a third degree lookup
-    val dir = mat(e
+    val dir = PartitionUtil.materializeConf(e
       .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
       .select(
@@ -285,8 +292,8 @@ object Graph {
     val tris = wedges
       .join(dir.select(col("x").as("w"), col("u").as("v")),
         Seq("v", "w"), "left_semi")
-    tris.select(explode(array(col("u"), col("v"), col("w"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("n_triangles"))
+    nullable(tris.select(explode(array(col("u"), col("v"), col("w"))).as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("n_triangles")))
   }
 
   /** Diagnostic: the wedge-join volume Σ_v C(outdeg(v), 2) the
@@ -333,30 +340,26 @@ object Graph {
     * all hash-shuffled on (s, v); state materializes per round. */
   def harmonicCentrality(edges: DataFrame, radius: Int = 3): DataFrame = {
     require(radius >= 1, s"harmonicCentrality: radius must be >= 1, got $radius")
-    val (e, m, local) = stage(edges.select(col("src"), col("dst"))
+    val (e0, m, local) = stage(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct(), QuadraticCap)
-    if (!local) return harmonicOn(e, m, radius, PartitionUtil.materializeConf(_))
-    // multi-source BFS, first distance wins
-    import edges.sparkSession.implicits._
-    val adj = e.as[(Long, Long)].collect().groupMap(_._1)(_._2)
-    // (v, d) for every v first reached from some source at hop d
-    val reached = adj.keys.toSeq.flatMap { s =>
-      var seen = Set(s)
-      var frontier = Seq(s)
-      (1 to radius).flatMap { d =>
-        frontier = frontier.flatMap(adj.getOrElse(_, Array.empty[Long])).distinct.filterNot(seen)
-        seen ++= frontier
-        frontier.map(_ -> d)
+    if (local) {
+      // multi-source BFS: (v, d) for every v first reached from some
+      // source at hop d
+      import edges.sparkSession.implicits._
+      val adj = e0.as[(Long, Long)].collect().groupMap(_._1)(_._2)
+      val reached = adj.keys.toSeq.flatMap { s =>
+        var seen = Set(s)
+        var frontier = Seq(s)
+        (1 to radius).flatMap { d =>
+          frontier = frontier.flatMap(adj.getOrElse(_, Array.empty[Long])).distinct.filterNot(seen)
+          seen ++= frontier
+          frontier.map(_ -> d)
+        }
       }
+      return localResult(edges.sparkSession, longs("v", "harmonic_q6", "n_reached"),
+        reached.groupBy(_._1).map { case (v, ds) =>
+          Row(v, ds.map(1000000L / _._2).sum, ds.size.toLong) }.toSeq)
     }
-    localResult(harmonicOn(e, m, radius, identity), reached.groupBy(_._1).map { case (v, ds) =>
-      Row(v, ds.map(1000000L / _._2).sum, ds.size.toLong) }.toSeq)
-  }
-
-  /** The distributed BFS of [[harmonicCentrality]]; `mat` materializes
-    * each round's frontier. */
-  private def harmonicOn(e0: DataFrame, m: Long, radius: Int,
-                         mat: DataFrame => DataFrame): DataFrame = {
     // size per-hop jobs to the graph (the pagerank pattern): a small
     // graph otherwise pays `radius` rounds of full-width task launches
     val e = e0.coalesce(math.max(1L, math.min(
@@ -368,15 +371,16 @@ object Graph {
     // pairs are the only new state, so checkpoint I/O is O(Σ|ball|)
     // total, not O(R·Σ|ball|); the anti join probes the union, which
     // scans R materialized block sets — R = radius, a small constant).
-    val frontiers = scala.collection.mutable.ArrayBuffer(mat(
+    val frontiers = scala.collection.mutable.ArrayBuffer(PartitionUtil.materializeConf(
       e.select(col("src").as("s")).distinct()
         .select(col("s"), col("s").as("v"), lit(0L).as("d"))))
     for (k <- 1 to radius)
-      frontiers += mat(harmonicHop(e, frontiers.last, frontiers.reduce(_ union _), k))
-    frontiers.reduce(_ union _).filter(col("d") > 0)
+      frontiers += PartitionUtil.materializeConf(
+        harmonicHop(e, frontiers.last, frontiers.reduce(_ union _), k))
+    nullable(frontiers.reduce(_ union _).filter(col("d") > 0)
       .groupBy(col("v"))
       .agg(sum(expr("1000000 div d")).as("harmonic_q6"),
-           count(lit(1)).as("n_reached"))
+           count(lit(1)).as("n_reached")))
   }
 
   /** ONE BFS hop of [[harmonicCentrality]], un-materialized (exposed
@@ -463,7 +467,7 @@ object Graph {
   private[graft] def neighborhoodProgram(radius: Int, k: Int): VertexProgram = {
     val h62 = shiftrightunsigned(
       graft.functions.ContentHashExpression.contentHash64(col("v").cast("string")), 2)
-    VertexProgram("sk", radius, _ => array(h62), col("sk"), Combine.BottomK(k),
+    VertexProgram("sk", radius, array(h62), col("sk"), Combine.BottomK(k),
       reverse = true, withOld = true, everyRound = true)
   }
 
@@ -534,7 +538,7 @@ object Graph {
     * `cost + w` along each out-edge, and keeps the minimum of its own
     * cost and every offer. */
   private[graft] def cheapestProgram(isSeed: Column => Column, hops: Int): VertexProgram =
-    VertexProgram("cost", hops, _ => when(col("seed"), lit(0L)),
+    VertexProgram("cost", hops, when(col("seed"), lit(0L)),
       col("cost") + col("w"), Combine.Min, seed = Some(isSeed), withOld = true)
 
   /** DuckDB oracle for [[cheapestPaths]] on the strong-tie graph with
@@ -582,8 +586,6 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val (e0, m0, local) = stage(undirected(edges), LinearCap)
-    def coreDeg(e: DataFrame) = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
     val stuck = s"kCore: did not converge within $maxRounds peel rounds — raise maxRounds"
     if (local) {
       // iterative peeling over the collected canonical edge set — the
@@ -600,7 +602,8 @@ object Graph {
         rounds += 1
       }
       require(es.length == prev, stuck)
-      return localResult(coreDeg(e0), degrees.map { case (v, d) => Row(v, d) }.toSeq)
+      return localResult(edges.sparkSession, longs("v", "core_deg"),
+        degrees.map { case (v, d) => Row(v, d) }.toSeq)
     }
     // the materialize is eager, so ONE count() action per peel round
     // suffices — the previous round's count is a variable, not a job
@@ -615,7 +618,8 @@ object Graph {
       r += 1
     }
     require(m == prev, stuck)
-    coreDeg(e)
+    nullable(e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("core_deg")))
   }
 
   /** ONE k-core peel round, un-materialized (exposed for plan
@@ -699,7 +703,7 @@ object Graph {
   /** Each node adopts the label its out-neighbors carry with the most
     * total edge weight, ties to the smallest label. */
   private[graft] def lpaProgram(iters: Int): VertexProgram =
-    VertexProgram("label", iters, _ => col("v"), col("label"), Combine.Mode(col("w")),
+    VertexProgram("label", iters, col("v"), col("label"), Combine.Mode(col("w")),
       reverse = true)
 
   /** DuckDB oracle for [[labelPropagation]] on the strong-tie supplier
@@ -891,32 +895,30 @@ object Graph {
   def linkPrediction(edges: DataFrame, maxMiddleDegree: Long, topK: Int): DataFrame = {
     require(maxMiddleDegree >= 2 && topK >= 1, "cap >= 2 and topK >= 1")
     val (e, _, local) = stage(undirected(edges), QuadraticCap)
-    if (!local) return linkOn(e, maxMiddleDegree, topK)
-    // same capped wedge generation, integer indices, and
-    // (cn desc, ra desc, a, b) total order
-    import edges.sparkSession.implicits._
-    val ewArr = e.as[(Long, Long)].collect()
-    val edgeSet = ewArr.toSet
-    val adjM = (ewArr ++ ewArr.map(_.swap))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    val deg = adjM.view.mapValues(_.length.toLong).toMap
-    val cn = new java.util.HashMap[(Long, Long), Long]()
-    val ra = new java.util.HashMap[(Long, Long), Long]()
-    for ((mid, ns) <- adjM if deg(mid) <= maxMiddleDegree;
-         i <- ns.indices; j <- i + 1 until ns.length) {
-      val key = (ns(i), ns(j))
-      cn.merge(key, 1L, (x, y) => x + y)
-      ra.merge(key, 1000000L / deg(mid), (x, y) => x + y)
+    if (local) {
+      // same capped wedge generation, integer indices, and
+      // (cn desc, ra desc, a, b) total order
+      import edges.sparkSession.implicits._
+      val ewArr = e.as[(Long, Long)].collect()
+      val edgeSet = ewArr.toSet
+      val adjM = (ewArr ++ ewArr.map(_.swap))
+        .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+      val deg = adjM.view.mapValues(_.length.toLong).toMap
+      val cn = new java.util.HashMap[(Long, Long), Long]()
+      val ra = new java.util.HashMap[(Long, Long), Long]()
+      for ((mid, ns) <- adjM if deg(mid) <= maxMiddleDegree;
+           i <- ns.indices; j <- i + 1 until ns.length) {
+        val key = (ns(i), ns(j))
+        cn.merge(key, 1L, (x, y) => x + y)
+        ra.merge(key, 1000000L / deg(mid), (x, y) => x + y)
+      }
+      val rows = cn.asScala.collect { case (key @ (a, b), c) if !edgeSet(key) =>
+        Array(a, b, c, 1000000L * c / (deg(a) + deg(b) - c), ra.get(key))
+      }
+      val top = rows.toSeq.sortBy(r => (-r(2), -r(4), r(0), r(1))).take(topK)
+      return localResult(edges.sparkSession, longs("a", "b", "cn", "jaccard_q6", "ra_q6"),
+        top.map(r => Row.fromSeq(r.toSeq)))
     }
-    val rows = cn.asScala.collect { case (key @ (a, b), c) if !edgeSet(key) =>
-      Array(a, b, c, 1000000L * c / (deg(a) + deg(b) - c), ra.get(key))
-    }
-    val top = rows.toSeq.sortBy(r => (-r(2), -r(4), r(0), r(1))).take(topK)
-    localResult(linkOn(e, maxMiddleDegree, topK), top.map(r => Row.fromSeq(r.toSeq)))
-  }
-
-  /** The distributed plan of [[linkPrediction]] over canonical edges. */
-  private def linkOn(e: DataFrame, maxMiddleDegree: Long, topK: Int): DataFrame = {
     val adj = e.select(col("a").as("u"), col("b").as("z"))
       .union(e.select(col("b").as("u"), col("a").as("z")))
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -931,13 +933,13 @@ object Graph {
     val cand = wedges.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cn"), sum(expr("1000000 div dm")).as("ra_q6"))
       .join(e, Seq("a", "b"), "left_anti") // score only MISSING links
-    cand
+    nullable(cand
       .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
       .select(col("a"), col("b"), col("cn"),
         expr("1000000 * cn div (da + db - cn)").as("jaccard_q6"), col("ra_q6"))
       .orderBy(col("cn").desc, col("ra_q6").desc, col("a"), col("b"))
-      .limit(topK)
+      .limit(topK))
   }
 
   /** Diagnostic for [[linkPrediction]]'s cap: the wedge volume

@@ -97,7 +97,7 @@ object PartitionUtil {
     * the plan's output partitioning (the LogicalRDD reports unknown
     * partitioning) — to materialize AND keep a hash partitioning
     * across joins, `persist()` the repartitioned plan instead (see
-    * Graph's prePartitionEdges). */
+    * the cluster edge layout of [[VertexProgram]]). */
   def materialize(df: DataFrame, checkpointDir: Option[String],
                   eager: Boolean = true): DataFrame =
     checkpointDir match {
@@ -111,7 +111,8 @@ object PartitionUtil {
   /** [[materialize]] with the checkpoint dir read from the session
     * conf `graft.checkpointDir` (empty/unset = localCheckpoint) — for
     * the operators whose signatures don't thread an explicit dir (the
-    * dedup-family shared-stage materializations). At 100 TB set the
+    * graph family, dedupGroups and the dedup-family shared-stage
+    * materializations). At 100 TB set the
     * conf to an HDFS/S3A path so an executor loss re-reads one
     * materialized stage instead of truncating localCheckpoint lineage
     * and failing the query. */

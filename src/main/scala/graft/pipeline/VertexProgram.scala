@@ -26,19 +26,17 @@ object Combine {
   final case class BottomK(k: Int) extends Combine
 }
 
-/** The graph sizes a program's `init` and `update` may depend on: the
-  * number of nodes (distinct edge sources) and of seed nodes. */
-final case class Sizes(n: Long, seeds: Long)
-
 /** One iterative graph operator over Long vertex ids, in the GraphX
   * Pregel / `aggregateMessages` shape. Nodes are the distinct edge
-  * sources. Every node starts at `init` (over `v` and `seed`; null =
-  * no state yet). Each of `rounds` synchronous rounds sends `message`
-  * along every edge whose sender holds a state — an expression over the
-  * edge columns, the sender's state column and `ow`, the sender's sum
-  * of `outWeight` — combines the messages per receiver into `m`, and
-  * sets the receiver's state to `update` (over `v`, `m` and, when
-  * `keepAll`, `seed`). A null message or state counts as none.
+  * sources; `seed` flags some of them. Every node starts at `init`
+  * (over `v`, `seed`, and the graph's node and seed counts `n` and
+  * `seeds`; null = no state yet). Each of `rounds` synchronous rounds
+  * sends `message` along every edge whose sender holds a state — an
+  * expression over the edge columns, the sender's state column and
+  * `ow`, the sender's sum of `outWeight` — combines the messages per
+  * receiver into `m`, and sets the receiver's state to `update` (over
+  * `v`, `m`, `n`, `seeds` and, when `keepAll`, `seed`). A null message
+  * or state counts as none.
   *
   * Flags: `reverse` sends from `dst` to `src`; `withOld` feeds each
   * vertex's own state into its combine; `keepAll` keeps a row for
@@ -55,10 +53,10 @@ final case class Sizes(n: Long, seeds: Long)
 final case class VertexProgram(
     state: String,
     rounds: Int,
-    init: Sizes => Column,
+    init: Column,
     message: Column,
     combine: Combine,
-    update: Sizes => Column = _ => col("m"),
+    update: Column = col("m"),
     seed: Option[Column => Column] = None,
     outWeight: Option[Column] = None,
     reverse: Boolean = false,
@@ -82,13 +80,12 @@ object VertexProgram {
     * holds when every node receives a message, so the receiver's seed
     * rides on the edges and a round is one join plus one aggregation;
     * otherwise a `keepAll` round left-joins the combine onto `nodes`. */
-  private[graft] final class Plans(p: VertexProgram, g: Sizes, ride: Boolean,
+  private[graft] final class Plans(p: VertexProgram, sizes: Map[String, Column], ride: Boolean,
                                    nodes: DataFrame, val edges: DataFrame) {
-    require(p.seed.isEmpty || g.seeds > 0, s"${p.state}: seed predicate matched no node")
     private def settle(df: DataFrame) = df.filter(col(p.state).isNotNull)
     private val rideSeed = p.seed.filter(_ => ride).map(_ => col("seed")).toSeq
 
-    def init: DataFrame = settle(nodes.select(col("v"), p.init(g).as(p.state)))
+    def init: DataFrame = settle(nodes.withColumns(sizes).select(col("v"), p.init.as(p.state)))
 
     def round(state: DataFrame): DataFrame = {
       val weight = Seq(p.combine).collect { case Combine.Mode(w) => w.as("wt") }
@@ -108,24 +105,13 @@ object VertexProgram {
             .select(col("v"), col("mm.msg").as("m"))
       }
       val joined = if (p.keepAll && !ride) nodes.join(combined, Seq("v"), "left") else combined
-      settle(joined.select(col("v"), p.update(g).as(p.state)))
+      settle(joined.withColumns(sizes).select(col("v"), p.update.as(p.state)))
     }
 
     def output(states: Seq[DataFrame]): DataFrame =
       if (!p.everyRound) states.last
       else states.zipWithIndex.map { case (s, i) => s.withColumn("r", lit(i + 1L)) }
         .reduce(_ unionByName _)
-  }
-
-  private def nodesOf(p: VertexProgram, e: DataFrame): DataFrame = {
-    val v = e.select(col("src").as("v")).distinct()
-    p.seed.fold(v)(f => v.withColumn("seed", f(col("v")).cast("boolean")))
-  }
-
-  private def edgesOf(p: VertexProgram, e: DataFrame, ride: Boolean): DataFrame = {
-    val ew = p.outWeight.fold(e)(w =>
-      e.join(e.groupBy(col(p.from)).agg(sum(w).as("ow")), Seq(p.from)))
-    p.seed.filter(_ => ride).fold(ew)(f => ew.withColumn("seed", f(col(p.to)).cast("boolean")))
   }
 
   /** Cluster venue. Edges are hash-partitioned on the sender and
@@ -142,37 +128,55 @@ object VertexProgram {
       state
     }
     plans.edges.unpersist(false)
-    plans.output(states)
+    Graph.nullable(plans.output(states))
   }
+
+  /** The result schema of `p` in both venues: `v`, the state and, with
+    * `everyRound`, the round `r`; every column nullable. */
+  private def schemaOf(p: VertexProgram): StructType = {
+    val state = p.combine match {
+      case Combine.BottomK(_) => ArrayType(LongType, containsNull = false)
+      case _ => LongType
+    }
+    StructType(Seq(StructField("v", LongType), StructField(p.state, state)) ++
+      Seq(StructField("r", LongType)).filter(_ => p.everyRound))
+  }
+
+  private def check(p: VertexProgram, seeds: Long): Unit =
+    require(p.seed.isEmpty || seeds > 0, s"${p.state}: seed predicate matched no node")
 
   /** The cluster plans of `p` over the materialized edges `e`. */
   private[graft] def clusterPlans(p: VertexProgram, e: DataFrame): Plans = {
-    val nodes = PartitionUtil.materializeConf(nodesOf(p, e))
+    val v = e.select(col("src").as("v")).distinct()
+    val nodes = PartitionUtil.materializeConf(
+      p.seed.fold(v)(f => v.withColumn("seed", f(col("v")).cast("boolean"))))
     val s = nodes.select(col("v"), lit(1).as("node"),
         (if (p.seed.isEmpty) lit(false) else col("seed")).as("s"))
       .join(e.select(col(p.to).as("v")).distinct().withColumn("recv", lit(1)), Seq("v"), "full")
       .agg(count(col("node")), count(when(col("s"), 1)),
         count(when(col("node").isNull || col("recv").isNull, 1))).head()
-    val g = Sizes(s.getLong(0), s.getLong(1))
+    check(p, s.getLong(1))
     val ride = p.keepAll && s.getLong(2) == 0L
-    val edges = edgesOf(p, e, ride)
+    val ew = p.outWeight.fold(e)(w =>
+      e.join(e.groupBy(col(p.from)).agg(sum(w).as("ow")), Seq(p.from)))
+    val edges = p.seed.filter(_ => ride).fold(ew)(f => ew.withColumn("seed", f(col(p.to)).cast("boolean")))
       .repartition(e.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(p.from))
       .persist()
     edges.count()
-    new Plans(p, g, ride, nodes, edges)
+    new Plans(p, Map("n" -> lit(s.getLong(0)), "seeds" -> lit(s.getLong(1))), ride, nodes, edges)
   }
 
-  /** Binds `cols` once to rows laid out as `schema`: the analyzed
-    * expressions the cluster would plan, evaluated without a job. */
-  private def bind(spark: SparkSession, schema: StructType, cols: Column*): InternalRow => InternalRow = {
+  /** Binds `cols` once to rows laid out as `schema`: one analysis, then
+    * one projection per column, evaluated on the driver without a job. */
+  private def bind(spark: SparkSession, schema: StructType, cols: Column*): Seq[MutableProjection] = {
     val Project(list, child) = ReplaceExpressions(spark.createDataFrame(java.util.List.of[Row](), schema)
       .select(cols: _*).queryExecution.analyzed)
-    val proj = MutableProjection.create(list, child.output)
-    proj.initialize(0)
-    proj
+    list.map { x =>
+      val proj = MutableProjection.create(Seq(x), child.output)
+      proj.initialize(0)
+      proj
+    }
   }
-
-  private def rowOf(schema: StructType) = new SpecificInternalRow(schema.map(_.dataType))
 
   /** Sorts `a` in place and compacts its distinct values to the front. */
   private def distinct(a: Array[Long], n: Int): Int = {
@@ -204,7 +208,6 @@ object VertexProgram {
   /** Driver venue: the same Columns, bound once, over a CSR by
     * receiver. A state is a BIGINT or a sketch, null when absent. */
   private[graft] def onDriver(p: VertexProgram, e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
     val rows = e.collect()
     val cols = e.columns.indices.map(c => rows.map(_.getLong(c))).toArray
     val ids = cols(0) ++ cols(1)
@@ -214,53 +217,44 @@ object VertexProgram {
     val node, recv, seed = new Array[Boolean](nv)
     si.foreach(node(_) = true)
     to.foreach(recv(_) = true)
-    val vSchema = StructType(StructField("v", LongType) +:
-      p.seed.map(_ => StructField("seed", BooleanType)).toSeq)
-    def vertex(row: InternalRow, i: Int): InternalRow = {
-      row.setLong(0, ids(i))
-      if (p.seed.nonEmpty) row.setBoolean(1, seed(i))
+    // one row layout for every bound Column: the edge columns, `ow`,
+    // the sender's state, then the vertex's `v`, `seed` and `m`
+    val stType = schemaOf(p)(p.state).dataType
+    val layout = StructType(e.schema.fields ++ p.outWeight.map(_ => StructField("ow", LongType)) ++
+      Seq(StructField(p.state, stType), StructField("v", LongType), StructField("seed", BooleanType),
+        StructField("m", stType), StructField("n", LongType), StructField("seeds", LongType)))
+    val Seq(iOw, iState, iV, iSeed, iM, iN, iSeeds) =
+      Seq("ow", p.state, "v", "seed", "m", "n", "seeds").map(layout.fieldNames.indexOf(_))
+    val row = new SpecificInternalRow(layout.map(_.dataType))
+    def vertex(i: Int): InternalRow = {
+      row.setLong(iV, ids(i))
+      row.setBoolean(iSeed, seed(i))
       row
     }
-    val vRow = rowOf(vSchema)
-    p.seed.foreach { f =>
-      val isSeed = bind(spark, vSchema, coalesce(f(col("v")).cast("boolean"), lit(false)))
-      for (i <- 0 until nv if node(i)) seed(i) = isSeed(vertex(vRow, i)).getBoolean(0)
+    val ow = new Array[Long](nv)
+    def edge(j: Int): InternalRow = {
+      for (c <- cols.indices) row.setLong(c, cols(c)(j))
+      if (iOw >= 0) row.setLong(iOw, ow(from(j)))
+      row
     }
-    val g = Sizes(node.count(identity), (0 until nv).count(i => node(i) && seed(i)))
-    val ride = p.keepAll && node.sameElements(recv)
-    // the cluster plans over lazy inputs give the result schema: no job
-    val plans = new Plans(p, g, ride, nodesOf(p, e), edgesOf(p, e, ride))
-    def empty(s: StructType) = spark.createDataFrame(java.util.List.of[Row](), s)
-    val s0 = plans.init.schema
-    val result = plans.output(
-      (1 to p.rounds).scanLeft(s0)((s, _) => plans.round(empty(s)).schema).tail.map(empty))
+    val isSeed +: weigh +: start +: step +: send +: weight =
+      bind(e.sparkSession, layout, Seq(coalesce(p.seed.fold(lit(false))(_(col("v")).cast("boolean")), lit(false)),
+        p.outWeight.getOrElse(lit(0L)), p.init, p.update, p.message) ++
+        Seq(p.combine).collect { case Combine.Mode(w) => w }: _*)
+    for (i <- 0 until nv if node(i)) seed(i) = isSeed(vertex(i)).getBoolean(0)
+    if (p.outWeight.nonEmpty) for (j <- rows.indices) ow(from(j)) += weigh(edge(j)).getLong(0)
+    val seeds = (0 until nv).count(i => node(i) && seed(i))
+    check(p, seeds)
+    row.setLong(iN, node.count(identity))
+    row.setLong(iSeeds, seeds)
+    def value(o: InternalRow): Any = if (o.isNullAt(0)) null else o.get(0, stType)
+    var st = Array.tabulate[Any](nv)(i => if (node(i)) value(start(vertex(i))) else null)
     val off = new Array[Int](nv + 1)
     to.foreach(t => off(t + 1) += 1)
     for (i <- 0 until nv) off(i + 1) += off(i)
     val order = new Array[Int](rows.length)
     val fill = off.clone()
     for (j <- rows.indices) { order(fill(to(j))) = j; fill(to(j)) += 1 }
-    val stType = s0(p.state).dataType
-    val mSchema = edgesOf(p, e, ride = false).schema.add(p.state, stType)
-    val slot = mSchema.fieldNames.init.map(e.columns.indexOf(_))
-    val mRow = rowOf(mSchema)
-    val ow = new Array[Long](nv)
-    def load(j: Int): InternalRow = {
-      for (f <- slot.indices) mRow.setLong(f, if (slot(f) >= 0) cols(slot(f))(j) else ow(from(j)))
-      mRow
-    }
-    p.outWeight.foreach { w =>
-      val weigh = bind(spark, mSchema, w)
-      for (j <- rows.indices) ow(from(j)) += weigh(load(j)).getLong(0)
-    }
-    val send = bind(spark, mSchema,
-      p.message +: Seq(p.combine).collect { case Combine.Mode(w) => w }: _*)
-    val uSchema = vSchema.add("m", stType, nullable = true)
-    val uRow = rowOf(uSchema)
-    val step = bind(spark, uSchema, p.update(g))
-    def value(o: InternalRow): Any = if (o.isNullAt(0)) null else o.get(0, stType)
-    val start = bind(spark, vSchema, p.init(g))
-    var st = Array.tabulate[Any](nv)(i => if (node(i)) value(start(vertex(vRow, i))) else null)
     val maxIn = (0 until nv).map(i => off(i + 1) - off(i)).maxOption.getOrElse(0) + 1
     val (xs, ws, as) = (new Array[Long](maxIn), new Array[Long](maxIn), new Array[Array[Long]](maxIn))
     val sketch = p.combine.isInstanceOf[Combine.BottomK]
@@ -275,11 +269,11 @@ object VertexProgram {
           val s = from(j)
           if (st(s) != null) {
             received = true
-            load(j).update(slot.length, st(s))
-            val o = send(mRow)
+            edge(j).update(iState, st(s))
+            val o = send(row)
             if (!o.isNullAt(0)) {
               if (sketch) as(n) = o.getArray(0).toLongArray() else xs(n) = o.getLong(0)
-              if (o.numFields > 1) ws(n) = o.getLong(1)
+              weight.foreach(w => ws(n) = w(row).getLong(0))
               n += 1
             }
           }
@@ -293,8 +287,8 @@ object VertexProgram {
           n += 1
         }
         if (if (p.keepAll) node(r) else received) {
-          uRow.update(uSchema.length - 1, if (n == 0) null else reduce(p.combine, xs, ws, as, n))
-          next(r) = value(step(vertex(uRow, r)))
+          vertex(r).update(iM, if (n == 0) null else reduce(p.combine, xs, ws, as, n))
+          next(r) = value(step(row))
         }
       }
       st = next
@@ -307,6 +301,6 @@ object VertexProgram {
           out += (if (p.everyRound) Row(ids(i), x, k.toLong) else Row(ids(i), x))
         }
     }
-    Graph.localResult(result, out.toSeq)
+    Graph.localResult(e.sparkSession, schemaOf(p), out.toSeq)
   }
 }
