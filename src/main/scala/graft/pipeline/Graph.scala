@@ -59,9 +59,11 @@ object Graph {
   private[graft] val QuadraticCap = ("graft.graph.maxDriverEdgesQuadratic", 262144L)
 
   /** The shared preamble: materialize an operator's edge relation once
-    * and decide the venue once — (edges, |E|, on the driver?). */
+    * and decide the venue once — (edges, |E|, on the driver?). The
+    * checkpoint is lazy: the count that sizes the relation is the job
+    * that materializes it. */
   private[graft] def stage(edges: DataFrame, cap: (String, Long)): (DataFrame, Long, Boolean) = {
-    val e = PartitionUtil.materializeConf(edges)
+    val e = PartitionUtil.materializeConf(edges, eager = false)
     val m = e.count()
     (e, m, m <= edges.sparkSession.conf.get(cap._1, cap._2.toString).toLong)
   }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{MutableProjection, SpecificInternalRow, UnsafeArrayData}
@@ -49,7 +47,7 @@ object Combine {
   * densified once into a CSR of primitive arrays, each Column bound
   * once to its row layout and evaluated per edge with no Spark job —
   * or on the cluster, one state join plus one combine aggregation per
-  * round. Both build their result against the cluster plan's schema. */
+  * round. Both return the same schema. */
 final case class VertexProgram(
     state: String,
     rounds: Int,
