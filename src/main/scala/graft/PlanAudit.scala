@@ -29,7 +29,7 @@ object PlanAudit {
 
   /** Join operators in `d`'s physical plan, not counting those inside
     * cached relations (built once, not per round). */
-  def joinCount(d: org.apache.spark.sql.DataFrame): Int =
+  private def joinCount(d: org.apache.spark.sql.DataFrame): Int =
     physical(d).collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.size
 
   /** The physical plan, with AQE's wrapper opened to its current plan. */

@@ -695,7 +695,7 @@ object Graph {
     *
     * Scale shape: per round, one equi-join of the label vector on
     * `dst` and one (v, label) weight aggregation + argmax, all
-    * bounded by |E|. Like pagerank's fast path, the round chain is
+    * bounded by |E|. Like pagerank's, the round chain is
     * reference-free (the edge relation and the seed labels are both
     * materialized), so the label vector checkpoints every 5th round
     * and at the end — bounded plan depth without a per-round job. */
@@ -750,8 +750,7 @@ object Graph {
     * and two map-side-combined per-community aggregations. The m
     * scalar is a single driver pull. */
   def communityModularity(edges: DataFrame, iters: Int): DataFrame = {
-    val ec = PartitionUtil.materialize(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")), None)
+    val ec = PartitionUtil.materializeConf(weighted(edges))
     val labels = labelPropagation(ec, iters)
     val und = undirected(ec).persist()
     val m = und.count()
@@ -808,7 +807,7 @@ object Graph {
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
     // materialize the (possibly expensive) edge construction ONCE —
     // both the degree aggregation and the triangle count read it
-    val ec = edges.localCheckpoint()
+    val ec = PartitionUtil.materializeConf(edges)
     val e = undirected(ec)
     val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
