@@ -216,7 +216,8 @@ object VertexProgram {
     si.foreach(node(_) = true)
     to.foreach(recv(_) = true)
     // one row layout for every bound Column: the edge columns, `ow`,
-    // the sender's state, then the vertex's `v`, `seed` and `m`
+    // the sender's state, the vertex's `v`, `seed` and `m`, and the
+    // graph's `n` and `seeds`
     val stType = schemaOf(p)(p.state).dataType
     val layout = StructType(e.schema.fields ++ p.outWeight.map(_ => StructField("ow", LongType)) ++
       Seq(StructField(p.state, stType), StructField("v", LongType), StructField("seed", BooleanType),
