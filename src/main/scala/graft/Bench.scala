@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — the driver's per-round throughput probe.
   *
   * Runs every declared query three times: an unmeasured warm-up pass
@@ -34,16 +32,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
 
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val queries = SparkEntry.queries
+    val names = queries.keys.toSeq.sorted
 
     // Force FULL evaluation of every output column: a counted query
     // lets Catalyst prune deterministic projection/UDF work the count
@@ -52,31 +44,39 @@ object Bench {
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
 
-    // warm-up pass: same plans, unmeasured
-    queries.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-    }
+    // A query that throws in any pass is reported in `failed` and left
+    // out of every timing: a failure must not read as a fast query.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String): Unit =
+      try force(queries(name)(spark, sfDir)) catch { case e: Throwable =>
+        if (failed.add(name)) System.err.println(s"bench: $name failed: $e")
+      }
 
-    def timedPass(): Seq[(String, Double)] = queries.map { case (name, fn) =>
+    // warm-up pass: same plans, unmeasured
+    names.foreach(run)
+
+    def timedPass(): Seq[(String, Double)] = names.map { name =>
       val t0 = System.nanoTime()
-      try { force(fn(spark, sfDir)) } catch { case _: Throwable => () }
+      run(name)
       name -> (System.nanoTime() - t0) / 1e9
     }
     val loadBefore = loadavg()
     val pass1 = timedPass()
     val pass2 = timedPass()
     val loadAfter = loadavg()
-    val results = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
+    def ok(pass: Seq[(String, Double)]) = pass.filterNot(q => failed(q._1))
+    val results = ok(pass1).zip(ok(pass2)).map { case ((name, a), (_, b)) =>
       name -> math.min(a, b)
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val t1 = pass1.map(_._2).sum; val t2 = pass2.map(_._2).sum
+    val t1 = ok(pass1).map(_._2).sum; val t2 = ok(pass2).map(_._2).sum
     val spread = if (math.min(t1, t2) > 0) math.max(t1, t2) / math.min(t1, t2) else 1.0
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"pass_totals":[$t1,$t2],""" +
-        s""""pass_spread":$spread,"n_queries":${results.length},"cpus":$cpus,""" +
+        s""""pass_spread":$spread,"n_queries":${results.length},"failed":$failedJson,"cpus":$cpus,""" +
         s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir"}"""
     println(line)
     // The driver's artifact keeps only a 2000-char stdout TAIL. The
@@ -95,7 +95,7 @@ object Bench {
       System.err.println(s"bench: could not write $outPath: ${e.getMessage}") }
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","pass_totals":[$t1,$t2],""" +
-        s""""pass_spread":$spread,"n_queries":${results.length},"cpus":$cpus,""" +
+        s""""pass_spread":$spread,"n_queries":${results.length},"failed":$failedJson,"cpus":$cpus,""" +
         s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,""" +
         s""""queries_file":"$outPath","sf":"$sfDir"}""")
     spark.stop()

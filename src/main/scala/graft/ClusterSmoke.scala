@@ -87,16 +87,10 @@ object ClusterSmoke {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", absCp)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 2 workers x 2 cores
+    val spark = GraftSession("local-cluster[2,2,1024]", 4, Map(
+      "spark.executor.extraClassPath" -> absCp,
+      "spark.executor.extraJavaOptions" -> addOpens))
     try {
       queryNames.foreach { name =>
         SparkEntry.queries(name)(spark, sfDir)

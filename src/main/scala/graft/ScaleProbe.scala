@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured scaling evidence: run the heavy pipeline operators on the
@@ -24,14 +24,7 @@ object ScaleProbe {
     // honor the same core-count env as Bench so the probe can produce
     // low-vs-high-core scaling evidence on the 10x replicas
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     // reliable-checkpoint exercise: with SPARK_GRAFT_CHECKPOINT_DIR set,
     // the dedup shared-stage materializations write through the Hadoop
     // FS path instead of localCheckpoint (PartitionUtil.materializeConf)

@@ -31,25 +31,13 @@ object Dedup {
     * expression ([[graft.functions.WordShingles]]): no catalyst→Seq
     * deserialization, no closure call per document (optimization
     * guide §1.2 per-task work / "functions, not UDFs"). Bit-identical
-    * to the retired [[shingleUdf]], pinned in PropertySpec. */
-  def shingles(text: Column, n: Int): Column = {
-    graft.functions.MinhashExpressions.register(
-      org.apache.spark.sql.SparkSession.active)
+    * to the retired [[shingleUdf]], pinned in PropertySpec. The
+    * expression is registered in `spark`, the session that owns the
+    * DataFrame the column is used on. */
+  def shingles(spark: org.apache.spark.sql.SparkSession)(text: Column, n: Int): Column = {
+    graft.functions.MinhashExpressions.register(spark)
     graft.functions.MinhashExpressions.wordShingles(tokens(text), n)
   }
-
-  /** Materialize-or-inline for the embedding-family shared stages
-    * (bandedSignatures / normalize / semdedup assignment), knob
-    * `graft.dedup.sharedStageMaterialize` (checkpoint | plain). Unlike
-    * the minhash banding, these stages carry BroadcastNestedLoopJoin
-    * fits or feed 3 consumers, where the round-16/17 A/Bs measured the
-    * one-time materialization clearly ahead (q97 1.87->1.12-class wins)
-    * — so `checkpoint` stays the default; the knob exists to re-measure
-    * per consumer without a rebuild. */
-  private def materializeShared(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("graft.dedup.sharedStageMaterialize",
-        "checkpoint") == "plain") df
-    else PartitionUtil.materializeConf(df)
 
   // ---- anchor sampling (shared by the quality audits) -----------------
 
@@ -152,7 +140,7 @@ object Dedup {
     // materialization that MEMORY_AND_DISK spills — so the persist
     // stays as the 100 TB default.
     val sh = PartitionUtil.spread(docs)
-      .select(col("doc_id"), shingles(col("text"), n).as("sh"))
+      .select(col("doc_id"), shingles(docs.sparkSession)(col("text"), n).as("sh"))
       .withColumn("sz", size(col("sh")).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val posting = sh.select(col("doc_id"), col("sz"), explode(col("sh")).as("s"))
@@ -315,7 +303,7 @@ object Dedup {
     val anchored = anchorFraction < 1.0
     // normalize feeds both sides of the exact a<b join — once, not
     // twice (same reused-intermediate materialization as the LSH side)
-    val nv = materializeShared(embeddings.select(col("vec_id"),
+    val nv = PartitionUtil.materializeConf(embeddings.select(col("vec_id"),
       Similarity.normalizeUdf(Similarity.asDouble(col("embedding"))).as("nv")))
     val aAll = nv.select(col("vec_id").as("id_a"), col("nv").as("va"))
     val a = if (anchored)
@@ -417,37 +405,27 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    graft.functions.MinhashExpressions.register(docs.sparkSession)
     // the tokenize + shingle + 64-slot MinHash signature pipeline
     // (all NATIVE codegen'd expressions — no UDF boundary; signature
     // and band fold fused into graft.functions.MinhashBands) feeds
-    // BOTH sides of the banding self-join. How to share it is a
-    // measured, consumer-dependent choice (optimization guide §3.3/§5
-    // vs §5's "materialize only where recompute > materialization"):
-    //   checkpoint — eager localCheckpoint, computes the banding once
-    //     as its own job; plain — no materialization, the banding runs
-    //     per join side (twice under a broadcast-hash self-join).
-    // Round-16 applied `checkpoint` blanket-wide and q96 regressed
-    // (driver: 1.23 -> 1.63 s); the round-17 per-consumer A/B (quiet
-    // box, interleaved passes — OPTIMIZATION_r17.md) measured `plain`
-    // faster or tied on ALL six consumers once the banding became a
-    // native expression (q96 1.56->1.30, q153 3.26->3.10, q160
-    // 0.74->0.65; q32/q112/q157 within noise), so `plain` is the
-    // default. Scale note: at corpus scale the self-join is SMJ/SHJ
-    // (both sides exceed the broadcast threshold), whose two identical
-    // band-key exchanges collapse via ReuseExchange — the banding still
-    // computes once; only the local broadcast-join regime ever ran it
-    // twice, and there recompute beats the checkpoint write+read.
-    val mode = docs.sparkSession.conf.get("graft.dedup.lshPairsMaterialize", "plain")
+    // BOTH sides of the banding self-join. A deterministic input is
+    // recomputed per side: the round-17 per-consumer A/B (quiet box,
+    // interleaved passes — OPTIMIZATION_r17.md) measured recompute
+    // faster or tied against an eager localCheckpoint on all six
+    // consumers (q96 1.56->1.30, q153 3.26->3.10, q160 0.74->0.65;
+    // q32/q112/q157 within noise), and at corpus scale the self-join is
+    // SMJ/SHJ whose two identical band-key exchanges collapse via
+    // ReuseExchange, so the banding computes once anyway. A
+    // non-deterministic input is materialized once instead: recomputed
+    // per side, the two sides would band different documents.
     val banded0 = PartitionUtil.spread(docs)
-      .select(col("doc_id"), shingles(col("text"), shingleN).as("sh"))
+      .select(col("doc_id"), shingles(docs.sparkSession)(col("text"), shingleN).as("sh"))
       .select(col("doc_id"), posexplode(
         graft.functions.MinhashExpressions.minhashBands(col("sh"), numHashes, r)))
       .select(col("doc_id"), col("pos").as("band_idx"), col("col").as("band_hash"))
-    val banded = mode match {
-      case "plain" => banded0
-      case _ => PartitionUtil.materializeConf(banded0)
-    }
+    val banded =
+      if (docs.queryExecution.analyzed.deterministic) banded0
+      else PartitionUtil.materializeConf(banded0)
     val a = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_a"))
     val b = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_b"))
     a.join(b, Seq("band_idx", "band_hash")).filter(col("id_a") < col("id_b"))
@@ -773,8 +751,8 @@ object Dedup {
     // the reused-intermediate move, optimization guide §3.3/§5).
     // O(N·bands) / O(N) narrow rows.
     val (banded0, nv0) = bandedSignatures(embeddings, bands, rowsPerBand, dim, seed)
-    val banded = materializeShared(banded0)
-    val nv = materializeShared(nv0)
+    val banded = PartitionUtil.materializeConf(banded0)
+    val nv = PartitionUtil.materializeConf(nv0)
     val a = banded.select(col("band_idx"), col("band_hash"), col("vec_id").as("id_a"))
     val b = banded.select(col("band_idx"), col("band_hash"), col("vec_id").as("id_b"))
     val cand = a.join(b, Seq("band_idx", "band_hash"))
@@ -833,8 +811,8 @@ object Dedup {
     // [[embeddingNearDupLsh]]: banded feeds the old AND new sides,
     // nv both re-score joins — compute each once
     val (banded0, nv0) = bandedSignatures(embeddings, bands, rowsPerBand, dim, seed)
-    val banded = materializeShared(banded0)
-    val nv = materializeShared(nv0)
+    val banded = PartitionUtil.materializeConf(banded0)
+    val nv = PartitionUtil.materializeConf(nv0)
     val old = banded.filter(col("vec_id") < splitId)
       .select(col("band_idx"), col("band_hash"), col("vec_id").as("id_old"))
     val fresh = banded.filter(col("vec_id") >= splitId)
@@ -915,7 +893,7 @@ object Dedup {
     // measured 1.91s -> 1.12s warm at sf0.1. O(N) narrow rows
     // (vec_id, cluster, nv), the standard reused-intermediate
     // materialization (optimization guide §3.3/§5).
-    val av = materializeShared(
+    val av = PartitionUtil.materializeConf(
       Similarity.gridCentroidAssignment(embeddings)
         .select(col("vec_id"), col("cluster"),
           Similarity.normalizeUdf(col("v")).as("nv")))

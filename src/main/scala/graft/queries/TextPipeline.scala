@@ -824,7 +824,7 @@ object TextPipeline {
     ("q75_decontam",
       (s, dir) => {
         val sh = t(s, dir, "documents")
-          .select(col("doc_id"), explode(Dedup.shingles(col("text"), 5)).as("shingle"))
+          .select(col("doc_id"), explode(Dedup.shingles(s)(col("text"), 5)).as("shingle"))
         val bench = sh.filter(col("doc_id") < 10).select(col("shingle")).distinct()
         sh.filter(col("doc_id") >= 10)
           .join(broadcast(bench), Seq("shingle"))

@@ -328,11 +328,11 @@ class GraphSpec extends AnyFunSuite with Matchers {
         Graph.pagerankProgram(7), df.select(col("src"), col("dst"), col("w")).localCheckpoint())
       val round = plans.round(plans.init)
       round.queryExecution.executedPlan.toString should include("InMemoryTableScan")
-      PlanAudit.shufflesCached(round) shouldBe false
+      PlanSpec.shufflesCached(round) shouldBe false
       plans.edges.unpersist(false)
       // the check itself sees a re-exchanged cached relation
       val cached = spark.range(100).select((col("id") % 7).as("dst")).persist()
-      PlanAudit.shufflesCached(cached.groupBy(col("dst")).count()) shouldBe true
+      PlanSpec.shufflesCached(cached.groupBy(col("dst")).count()) shouldBe true
       cached.unpersist(false)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

@@ -664,7 +664,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       (12L, "totally clean document with no benchmark overlap at all")
     ).toDF("doc_id", "text")
     def plain(n: Int) = { // the unfiltered reference join
-      val sh = corpus.select($"doc_id", explode(Dedup.shingles($"text", n)).as("s"))
+      val sh = corpus.select($"doc_id", explode(Dedup.shingles(spark)($"text", n)).as("s"))
       val bench = sh.filter($"doc_id" < 10).select($"s").distinct()
       sh.filter($"doc_id" >= 10).join(bench, Seq("s"), "left_semi")
         .groupBy($"doc_id").agg(count(lit(1)).as("n_shared"))
@@ -1440,7 +1440,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
       (7L, null.asInstanceOf[String])) // null text
     val df = texts.toDF("doc_id", "text")
     val n = 3; val numHashes = 64; val bands = 16; val r = numHashes / bands
-    val got = df.select(col("doc_id"), Dedup.shingles(col("text"), n).as("sh"))
+    val got = df.select(col("doc_id"), Dedup.shingles(spark)(col("text"), n).as("sh"))
       .withColumn("bh", graft.functions.MinhashExpressions
         .minhashBands(col("sh"), numHashes, r))
       .as[(Long, Seq[String], Seq[Long])].collect().sortBy(_._1).toList
@@ -1458,7 +1458,7 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     }
     // the whole projection stays inside generated code — no closure UDF
     val plan = df.select(graft.functions.MinhashExpressions.minhashBands(
-      Dedup.shingles(col("text"), n), numHashes, r))
+      Dedup.shingles(spark)(col("text"), n), numHashes, r))
       .queryExecution.executedPlan.toString
     plan.contains("ScalaUDF") shouldBe false
     // the full pair operator agrees with itself across partitionings
@@ -1468,6 +1468,42 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     val p2 = Dedup.minhashLshPairs(df.repartition(5), n, numHashes, bands)
       .as[(Long, Long, Long)].collect().sorted.toList
     p2 shouldBe p1
+  }
+
+  test("shingle expressions register in the session that owns the DataFrame") {
+    val other = spark.newSession()
+    import other.implicits._
+    val corpus = Seq((1L, "a b c d e f"), (2L, "a b c d x y"), (10L, "a b c d e q"), (11L, "z z z z"))
+      .toDF("doc_id", "text")
+    // the shared session stays the active one; `other` has never had
+    // word_shingles registered before these calls
+    org.apache.spark.sql.SparkSession.active should not be theSameInstanceAs(other)
+    corpus.select(explode(Dedup.shingles(other)(col("text"), 3))).count() shouldBe 13L
+    Decontam.bloomDecontam(corpus, col("doc_id") < 10, n = 4)
+      .as[(Long, Long)].collect().toSeq shouldBe Seq(10L -> 2L)
+  }
+
+  test("minhash banding: a non-deterministic input is materialized once for both join sides") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val base = docs
+    // value-preserving, but a non-deterministic plan: recomputed per
+    // join side, each side would draw its own rand()
+    val noisy = base.withColumn("text", when(rand(7) < 2.0, col("text")))
+    noisy.queryExecution.analyzed.deterministic shouldBe false
+    def rdds(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd.id }
+    val pairs = Dedup.minhashLshPairs(noisy, 3, 64, 16)
+    val plan = pairs.queryExecution.optimizedPlan
+    withClue(plan.toString) {
+      rdds(pairs) should have size 2
+      rdds(pairs).distinct should have size 1
+      plan.find(_.expressions.exists(!_.deterministic)) shouldBe None
+    }
+    // a deterministic input recomputes the banding per side
+    val plain = Dedup.minhashLshPairs(base, 3, 64, 16)
+    rdds(plain) shouldBe empty
+    pairs.collect().sortBy(r => (r.getLong(0), r.getLong(1))) shouldBe
+      plain.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
   }
 
   test("graft.checkpointDir: dedup shared-stage materializations take the reliable-checkpoint path bit-identically") {

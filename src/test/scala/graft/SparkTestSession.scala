@@ -7,15 +7,5 @@ import org.apache.spark.sql.SparkSession
   * cluster matrix — partitioning behavior is exercised by explicit
   * repartition calls instead). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("local[4]", 4, logLevel = "ERROR")
 }
